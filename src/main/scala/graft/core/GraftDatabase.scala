@@ -23,7 +23,17 @@ import graft.operators.{ProductQuantization, SimilaritySearch, TextAnalysis, Vec
   *   <root>/<collection>/_graft_meta.ddl   // collection schema (DDL string)
   *   <root>/<collection>/part-....parquet  // data files (cluster_id=... dirs
   *                                         //   after REINDEX)
+  *   <root>/graft_<family>_<collection>/   // managed sidecars (below)
   * }}}
+  *
+  * The six managed sidecars — postings (`textindex`), minhash, winsig,
+  * dhash, splits and attrs — share ONE lifecycle, [[SegmentedArtifact]]:
+  * a `meta.json` generation pointer committed after a fresh `gen_<g>/`
+  * is complete, `(id, seg)` tombstones appended beside `seg`-tagged
+  * segments, the `(id, payload_md5)` refresh diff, pointer-flip
+  * compaction, and the `stale` marker every mutation sets. Each family
+  * here keeps only its row derivation and its parameters; DROP,
+  * LISTINDEXES and the mutations walk the one registry, [[sidecars]].
   *
   * All paths go through Hadoop [[FileSystem]], so a database root can live on
   * HDFS/S3/local alike; nothing below assumes a local disk. Mutation commands
@@ -37,6 +47,23 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
   private val fs: FileSystem = root.getFileSystem(spark.sessionState.newHadoopConf())
 
   import GraftDatabase._
+  import SegmentedArtifact.{readString, writeString}
+
+  /** Every managed sidecar ([[SegmentedArtifact]], one per family) — the
+    * registry DROP, LISTINDEXES and every mutation walk.
+    */
+  private val sidecars: Seq[SegmentedArtifact] =
+    SegmentedArtifact.Families.map(new SegmentedArtifact(spark, fs, root, _))
+
+  private[graft] def sidecar(f: SegmentedArtifact.Family): SegmentedArtifact =
+    sidecars.find(_.family == f).get
+
+  private val textArt = sidecar(SegmentedArtifact.Postings)
+  private val minhashArt = sidecar(SegmentedArtifact.Minhash)
+  private val winsigArt = sidecar(SegmentedArtifact.Winsig)
+  private val dhashArt = sidecar(SegmentedArtifact.Dhash)
+  private val splitsArt = sidecar(SegmentedArtifact.Splits)
+  private val attrsArt = sidecar(SegmentedArtifact.Attrs)
 
   def name: String = root.getName
 
@@ -66,18 +93,20 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     * first use). */
   def collectionExists(name: String): Boolean = fs.exists(metaPath(name))
 
-  /** DROP (reference `src/command/types.rs:21-31`). */
+  /** DROP (reference `src/command/types.rs:21-31`). Every reserved path
+    * of the collection goes FIRST — each sidecar, the batch log, and the
+    * trash a crashed rewrite may have left (a later CREATE would
+    * otherwise resurrect it through [[recoverIfCrashed]]) — and the
+    * collection dir LAST, so a crash mid-DROP leaves the collection
+    * visible and re-droppable, never orphaned reserved paths.
+    */
   def dropCollection(name: String): Unit = {
+    recoverIfCrashed(name)
     val dir = collDir(name)
     if (!fs.exists(dir)) throw new IllegalStateException(s"no such collection: $name")
+    (sidecars.map(_.dir(name)) :+ batchLogDir(name) :+ trashPath(name))
+      .foreach(p => if (fs.exists(p)) fs.delete(p, true))
     fs.delete(dir, true)
-    deleteTextIndex(name) // the artifacts must not outlive their collection
-    deleteMinhashIndex(name)
-    deleteWinsigIndex(name)
-    deleteDhashIndex(name)
-    deleteSplitsSidecar(name)
-    deleteAttrsIndex(name)
-    if (fs.exists(batchLogDir(name))) { fs.delete(batchLogDir(name), true); () }
     ()
   }
 
@@ -110,24 +139,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     indexType(name).foreach(t => rows += ((s"vector:$t", "live")))
     if (fs.exists(new Path(collDir(name), TokenizerMetaFile)))
       rows += (("tokenizer", "live"))
-    if (fs.exists(textIndexMetaPath(name)))
-      rows += (("postings",
-        if (fs.exists(textIndexStaleMarker(name))) "stale" else "live"))
-    if (fs.exists(new Path(minhashDir(name), "meta.json")))
-      rows += (("minhash",
-        if (fs.exists(minhashStaleMarker(name))) "stale" else "live"))
-    if (fs.exists(new Path(winsigDir(name), "meta.json")))
-      rows += (("winsig",
-        if (fs.exists(winsigStaleMarker(name))) "stale" else "live"))
-    if (fs.exists(dhashMetaPath(name)))
-      rows += (("dhash",
-        if (fs.exists(dhashStaleMarker(name))) "stale" else "live"))
-    // the split sidecar never goes stale: assignments are point-in-time
-    // placements by design (a re-SPLIT rebuilds, mutations don't move)
-    if (fs.exists(splitsMetaPath(name))) rows += (("splits", "live"))
-    if (fs.exists(attrsMetaPath(name)))
-      rows += (("attrs",
-        if (fs.exists(attrsStaleMarker(name))) "stale" else "live"))
+    sidecars.foreach(a => a.state(name).foreach(st => rows += ((a.family.kind, st))))
     rows.sortBy(_._1).toSeq.toDF("index_type", "state")
   }
 
@@ -207,6 +219,13 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     df.select(cols.toIndexedSeq: _*)
   }
 
+  /** Mark every stored artifact of `name` stale — each mutation calls
+    * this: the rows it adds, changes or removes are in no stored
+    * artifact, and a stale artifact never serves.
+    */
+  private def invalidateSidecars(name: String): Unit =
+    sidecars.foreach(_.invalidate(name))
+
   /** INSERT a single record (reference `src/command/types.rs:56-67`).
     * Point-writes produce one small file per call — an anti-pattern at scale,
     * kept for command parity; `compact` (TRUNCATEWAL) merges them.
@@ -232,11 +251,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   def bulkInsert(name: String, df: DataFrame): Unit = {
     requireCollection(name)
-    invalidateTextIndex(name) // appended rows are not in the stored postings
-    invalidateMinhashIndex(name) // ... nor in the stored signatures
-    invalidateWinsigIndex(name) // ... nor in the stored window sigs
-    invalidateDhashIndex(name) // ... nor in the stored dhash bands
-    invalidateAttrsIndex(name) // ... nor in the stored attributes
+    invalidateSidecars(name) // appended rows are in no stored artifact
     // derived columns the existing data carries (quantized copy, cluster
     // assignment) are recomputed for arriving rows in the same write pass —
     // an append may never produce rows missing a column the readers expect.
@@ -378,9 +393,9 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     val cur00 = attrs match {
       case None => cur000
       case Some(spec) =>
-        require(fs.exists(attrsMetaPath(name)),
+        require(attrsArt.exists(name),
           s"EXPORT attrs= needs the attribute sidecar on $name — run TAG first")
-        require(!fs.exists(attrsStaleMarker(name)),
+        require(!attrsArt.isStale(name),
           s"attribute sidecar on $name is stale (a mutation landed after " +
             "the last TAG) — TAG mode=refresh first")
         cur000.join(
@@ -423,7 +438,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       case Some(sv) =>
         require(Seq("train", "val", "test").contains(sv),
           s"EXPORT split= must be train, val, or test, got '$sv'")
-        require(fs.exists(splitsMetaPath(name)),
+        require(splitsArt.exists(name),
           s"EXPORT split=$sv needs the split sidecar on $name — run SPLIT first")
         curAll.join(
           splitAssignments(name).filter(col("split") === sv).select("id"),
@@ -755,11 +770,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   def update(name: String, updates: DataFrame, key: String = "id"): Unit = {
     requireCollection(name)
-    invalidateTextIndex(name)
-    invalidateMinhashIndex(name)
-    invalidateWinsigIndex(name)
-    invalidateDhashIndex(name)
-    invalidateAttrsIndex(name)
+    invalidateSidecars(name)
     val current = read(name)
     val hasIndex = current.columns.contains("cluster_id")
     val hasQuant = current.columns.contains(QuantCol)
@@ -803,11 +814,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   def delete(name: String, predicate: Column): Unit = {
     requireCollection(name)
-    invalidateTextIndex(name)
-    invalidateMinhashIndex(name)
-    invalidateWinsigIndex(name)
-    invalidateDhashIndex(name)
-    invalidateAttrsIndex(name)
+    invalidateSidecars(name)
     rewrite(name, graft.operators.Mutations.deleteWhere(read(name), predicate))
   }
 
@@ -834,11 +841,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   def sync(name: String, snapshot: DataFrame, key: String = "id"): DataFrame = {
     requireCollection(name)
-    invalidateTextIndex(name)
-    invalidateMinhashIndex(name)
-    invalidateWinsigIndex(name)
-    invalidateDhashIndex(name)
-    invalidateAttrsIndex(name)
+    invalidateSidecars(name)
     import spark.implicits._
     val next = align(name, snapshot)
     val current = read(name)
@@ -974,41 +977,14 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
   def searchText(name: String, rawTerms: Seq[String], k1: Double = 1.2,
       b: Double = 0.75, k: Int = 20): DataFrame = {
     requireCollection(name)
-    // both the postings index and the rescan tokenizer store normalized
-    // lowercase [a-z0-9]+ tokens — a verbatim 'Vector' or 'data-merge'
-    // could never match on either path (a silent empty result at the
-    // command surface). Incoming terms go through the SAME rule:
-    // lowercase, split at non-alphanumerics, drop empties, dedup.
-    val terms = normalizeTerms(rawTerms)
-    require(terms.nonEmpty,
-      s"no searchable terms after normalization (got: ${rawTerms.mkString(", ")})")
-    val tDir = textIndexDir(name)
-    // the stored path serves only a LIVE artifact: a stale marker (any
-    // mutation since the last build/refresh) routes to the exact rescan
-    // — a stale posting must never serve
-    if (fs.exists(new Path(tDir, "meta.json")) &&
-        !fs.exists(textIndexStaleMarker(name))) {
-      val buckets = parseTextIndexBuckets(
-        readString(fs, new Path(tDir, "meta.json")))
-      val wanted = terms.map(bucketOfTerm(_, buckets)).distinct
-      val postings = readArtifact(
-          new Path(textGenDir(name), "postings"), PostingsSchema)
-        .filter(col("term_bucket").isin(wanted: _*) &&
-          col("term").isin(terms: _*))
-      // segment-aware read: tombstoned (id, seg) versions drop via a
-      // broadcast anti-join on BOTH frames (partition pruning at the
-      // postings scan is untouched — the filter stays scan-side)
-      val livePostings = postings
-        .join(broadcast(tombstones(name)), Seq("id", "seg"), "left_anti")
-      val doclens = liveDoclens(name).select(col("id"), col("dl"))
-      graft.operators.TextAnalysis.bm25FromIndex(livePostings, doclens, "id",
-        terms, k1, b, k)
-    } else {
-      val cur = read(name)
-      require(cur.columns.contains("payload"),
-        s"SEARCHTEXT needs a payload column on $name " +
-          s"(has: ${cur.columns.mkString(", ")})")
-      graft.operators.TextAnalysis.bm25(cur, "id", "payload", terms, k1, b, k)
+    val terms = searchTerms(rawTerms)
+    storedText(name, terms) match {
+      case Some((postings, g)) =>
+        graft.operators.TextAnalysis.bm25FromIndex(postings, liveDoclens(g),
+          "id", terms, k1, b, k)
+      case None =>
+        graft.operators.TextAnalysis.bm25(textScan(name, "SEARCHTEXT"),
+          "id", "payload", terms, k1, b, k)
     }
   }
 
@@ -1022,31 +998,14 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
   def searchTextQL(name: String, rawTerms: Seq[String],
       mu: Double = 2000.0, k: Int = 20): DataFrame = {
     requireCollection(name)
-    val terms = normalizeTerms(rawTerms)
-    require(terms.nonEmpty,
-      s"no searchable terms after normalization (got: ${rawTerms.mkString(", ")})")
-    val tDir = textIndexDir(name)
-    if (fs.exists(new Path(tDir, "meta.json")) &&
-        !fs.exists(textIndexStaleMarker(name))) {
-      val buckets = parseTextIndexBuckets(
-        readString(fs, new Path(tDir, "meta.json")))
-      val wanted = terms.map(bucketOfTerm(_, buckets)).distinct
-      val postings = readArtifact(
-          new Path(textGenDir(name), "postings"), PostingsSchema)
-        .filter(col("term_bucket").isin(wanted: _*) &&
-          col("term").isin(terms: _*))
-      val livePostings = postings
-        .join(broadcast(tombstones(name)), Seq("id", "seg"), "left_anti")
-      val doclens = liveDoclens(name).select(col("id"), col("dl"))
-      graft.operators.TextAnalysis.dirichletQLFromIndex(livePostings,
-        doclens, "id", terms, mu, k)
-    } else {
-      val cur = read(name)
-      require(cur.columns.contains("payload"),
-        s"SEARCHTEXT needs a payload column on $name " +
-          s"(has: ${cur.columns.mkString(", ")})")
-      graft.operators.TextAnalysis.dirichletQL(cur, "id", "payload", terms,
-        mu, k)
+    val terms = searchTerms(rawTerms)
+    storedText(name, terms) match {
+      case Some((postings, g)) =>
+        graft.operators.TextAnalysis.dirichletQLFromIndex(postings,
+          liveDoclens(g), "id", terms, mu, k)
+      case None =>
+        graft.operators.TextAnalysis.dirichletQL(
+          textScan(name, "SEARCHTEXT"), "id", "payload", terms, mu, k)
     }
   }
 
@@ -1059,33 +1018,68 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
   def searchTextJM(name: String, rawTerms: Seq[String],
       lambda: Double = 0.7, k: Int = 20): DataFrame = {
     requireCollection(name)
+    val terms = searchTerms(rawTerms)
+    storedText(name, terms) match {
+      case Some((postings, g)) =>
+        graft.operators.TextAnalysis.jelinekMercerQLFromIndex(postings,
+          liveDoclens(g), "id", terms, lambda, k)
+      case None =>
+        graft.operators.TextAnalysis.jelinekMercerQL(
+          textScan(name, "SEARCHTEXT"), "id", "payload", terms, lambda, k)
+    }
+  }
+
+  /** Query terms through the tokenizer's rule — both the postings index
+    * and the rescan store normalized lowercase [a-z0-9]+ tokens, so a
+    * verbatim 'Vector' or 'data-merge' could never match on either path
+    * (a silent empty result at the command surface).
+    */
+  private def searchTerms(rawTerms: Seq[String]): Seq[String] = {
     val terms = normalizeTerms(rawTerms)
     require(terms.nonEmpty,
       s"no searchable terms after normalization (got: ${rawTerms.mkString(", ")})")
-    val tDir = textIndexDir(name)
-    if (fs.exists(new Path(tDir, "meta.json")) &&
-        !fs.exists(textIndexStaleMarker(name))) {
-      val buckets = parseTextIndexBuckets(
-        readString(fs, new Path(tDir, "meta.json")))
-      val wanted = terms.map(bucketOfTerm(_, buckets)).distinct
-      val postings = readArtifact(
-          new Path(textGenDir(name), "postings"), PostingsSchema)
-        .filter(col("term_bucket").isin(wanted: _*) &&
-          col("term").isin(terms: _*))
-      val livePostings = postings
-        .join(broadcast(tombstones(name)), Seq("id", "seg"), "left_anti")
-      val doclens = liveDoclens(name).select(col("id"), col("dl"))
-      graft.operators.TextAnalysis.jelinekMercerQLFromIndex(livePostings,
-        doclens, "id", terms, lambda, k)
-    } else {
-      val cur = read(name)
-      require(cur.columns.contains("payload"),
-        s"SEARCHTEXT needs a payload column on $name " +
-          s"(has: ${cur.columns.mkString(", ")})")
-      graft.operators.TextAnalysis.jelinekMercerQL(cur, "id", "payload",
-        terms, lambda, k)
-    }
+    terms
   }
+
+  /** The rescan side of every text query: the collection, which must
+    * carry a payload column.
+    */
+  private def textScan(name: String, command: String): DataFrame = {
+    val cur = read(name)
+    require(cur.columns.contains("payload"),
+      s"$command needs a payload column on $name " +
+        s"(has: ${cur.columns.mkString(", ")})")
+    cur
+  }
+
+  /** The stored read every text query shares: a LIVE postings artifact's
+    * `frame` rows ("postings", or "positions" for the positional
+    * queries) pruned to `terms`' `term_bucket=` partitions, tombstoned
+    * `(id, seg)` versions dropped via a broadcast anti-join (partition
+    * pruning at the scan is untouched — the filter stays scan-side),
+    * with the generation they were read from. None when no live artifact
+    * (with that frame) serves — the caller rescans: a stale posting must
+    * never serve.
+    */
+  private def storedText(name: String, terms: Seq[String],
+      frame: String = "postings"): Option[(DataFrame, Path)] =
+    if (!textArt.isLive(name) ||
+        (frame == "positions" && !textIndexHasPositions(name))) None
+    else {
+      val g = textArt.at(name)
+      val buckets = textArt.intParam(name, "buckets")
+      val wanted = terms.map(bucketOfTerm(_, buckets)).distinct
+      val rows = textArt.dropDead(g, textArt.read(g, frame)
+        .filter(col("term_bucket").isin(wanted: _*) &&
+          col("term").isin(terms: _*)))
+      Some((rows, g))
+    }
+
+  /** The live document lengths `(id, dl)` of generation `g` — the BM25 N
+    * and avgdl of the stored index.
+    */
+  private def liveDoclens(g: Path): DataFrame =
+    textArt.liveRows(g, "doclens").select(col("id"), col("dl"))
 
   /** REINDEX type=postings — materialize the text index as a managed
     * artifact beside the collection: term-grain postings partitioned by
@@ -1097,14 +1091,14 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     * estimate ([[graft.operators.ScaleKnobs.postingsBuckets]]) — the
     * knob that used to be a doc note a 100 TB user had to remember.
     *
-    * SEGMENTED layout (round 11 — the Lucene model, Spark-first): every
-    * row carries a `seg` generation number (full build = seg 0), the
-    * doclens companion carries `payload_md5` (the diff key), and a
-    * `tombstones` frame lists dead `(id, seg)` versions. Readers see
-    * live rows = rows anti-joined against tombstones (a broadcast-sized
-    * frame). [[refreshPostings]] appends a DELTA segment + tombstones
-    * instead of re-tokenizing the corpus — the nightly 0.1% delta costs
-    * 0.1%, not a corpus pass.
+    * SEGMENTED layout (the [[SegmentedArtifact]] lifecycle — the Lucene
+    * model, Spark-first): every row carries a `seg` number (full build =
+    * seg 0), the doclens companion carries `payload_md5` (the diff key),
+    * and a `tombstones` frame lists dead `(id, seg)` versions. Readers
+    * see live rows = rows anti-joined against tombstones (a
+    * broadcast-sized frame). [[refreshPostings]] appends a DELTA segment
+    * + tombstones instead of re-tokenizing the corpus — the nightly 0.1%
+    * delta costs 0.1%, not a corpus pass.
     *
     * Staleness contract (spec-pinned): every MUTATION (insert,
     * bulk-insert, update, delete, sync) marks the artifact STALE — a
@@ -1133,58 +1127,50 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     val cur = read(name)
     require(cur.columns.contains("payload"),
       s"REINDEX type=postings needs a payload column on $name")
-    val dir = textIndexDir(name)
-    if (fs.exists(dir)) fs.delete(dir, true)
-    writeTextSegment(name, cur, seg = 0, buckets = nBuckets,
-      positions = positions, genDir = new Path(dir, "gen_0"))
-    writeString(fs, textIndexMetaPath(name),
-      s"""{"type":"postings","buckets":$nBuckets,"positions":$positions,"gen":0}""")
+    textArt.commit(name, s""","buckets":$nBuckets,"positions":$positions""") {
+      writeTextSegment(cur, 0, nBuckets, positions, _)
+    }
   }
 
-  /** One index segment: postings (term-bucket-partitioned, `seg`-tagged)
-    * + doclens (`dl`, `payload_md5`, `seg`) — and, when the artifact was
-    * built `positions=true`, the POSITIONAL rows `(term, id, pos, seg)`
-    * in the same bucket layout — for `rows`, APPENDED into the shared
-    * artifact directories.
+  /** One index segment — doclens (`dl`, `payload_md5`, `seg`: the diff
+    * base, written first) + postings (term-bucket-partitioned,
+    * `seg`-tagged) and, when the artifact was built `positions=true`,
+    * the POSITIONAL rows `(term, id, pos, seg)` in the same bucket
+    * layout — for `rows`, APPENDED into the generation's frames.
     */
-  private def writeTextSegment(name: String, rows: DataFrame, seg: Int,
-      buckets: Int, positions: Boolean, genDir: Path): Unit = {
+  private def writeTextSegment(rows: DataFrame, seg: Int, buckets: Int,
+      positions: Boolean, genDir: Path): Unit = {
     def bucketed(df: DataFrame): DataFrame = df
       .withColumn("seg", lit(seg))
       .withColumn("term_bucket",
         (conv(substring(md5(col("term")), 1, 4), 16, 10).cast("int")
           % buckets).cast("int"))
+    textArt.write(graft.operators.TextAnalysis.docLengths(rows, "id", "payload")
+      .join(rows.select(col("id"), md5(col("payload")).as("payload_md5")),
+        Seq("id"))
+      .withColumn("seg", lit(seg)), genDir, "doclens")
     // always partitioned, even for a zero-row segment (the write then
     // emits only _SUCCESS): readers pass explicit schemas, so the
     // schemaless-empty-dir inference failure cannot occur, and every
     // later partitioned append lands on a layout-compatible directory
-    bucketed(graft.operators.TextAnalysis.invertedIndex(rows, "id", "payload"))
-      .write.mode("append").option("compression", Compression)
-      .partitionBy("term_bucket")
-      .parquet(new Path(genDir, "postings").toString)
+    textArt.write(bucketed(
+      graft.operators.TextAnalysis.invertedIndex(rows, "id", "payload")),
+      genDir, "postings")
     if (positions)
-      bucketed(graft.operators.TextAnalysis
-          .invertedIndexPositional(rows, "id", "payload"))
-        .write.mode("append").option("compression", Compression)
-        .partitionBy("term_bucket")
-        .parquet(new Path(genDir, "positions").toString)
-    graft.operators.TextAnalysis.docLengths(rows, "id", "payload")
-      .join(rows.select(col("id"), md5(col("payload")).as("payload_md5")),
-        Seq("id"))
-      .withColumn("seg", lit(seg))
-      .write.mode("append").option("compression", Compression)
-      .parquet(new Path(genDir, "doclens").toString)
+      textArt.write(bucketed(graft.operators.TextAnalysis
+        .invertedIndexPositional(rows, "id", "payload")), genDir, "positions")
   }
 
   /** REINDEX type=postings;mode=refresh — INCREMENTAL index maintenance:
     * diff the collection against the (possibly stale) stored artifact by
     * `(id, payload_md5)`, tokenize ONLY the new/changed documents into a
     * fresh segment, tombstone the replaced/deleted versions, and clear
-    * the stale marker. Value-identical to a full rebuild (spec-proven
-    * row-for-row; the q202 gate replays the mutated corpus in SQL) at a
-    * cost proportional to the DELTA: the expensive pass (tokenize +
-    * postings shuffle) touches changed docs only; the diff itself is two
-    * anti-joins of (id, md5) frames — doc-count-sized, not token-sized.
+    * the stale marker ([[SegmentedArtifact.refresh]]). Value-identical to
+    * a full rebuild (spec-proven row-for-row; the q202 gate replays the
+    * mutated corpus in SQL) at a cost proportional to the DELTA: the
+    * expensive pass (tokenize + postings shuffle) touches changed docs
+    * only; the diff itself is two anti-joins of (id, md5) frames —
+    * doc-count-sized, not token-sized.
     *
     * Requires an existing artifact (nothing to refresh otherwise —
     * loud). Unique ids assumed, as everywhere in the index family (the
@@ -1209,53 +1195,15 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   def refreshPostings(name: String): Unit = {
     requireCollection(name)
-    require(fs.exists(textIndexMetaPath(name)),
-      s"no postings artifact on $name to refresh — run REINDEX type=postings first")
-    val buckets = parseTextIndexBuckets(
-      readString(fs, textIndexMetaPath(name)))
-    val genDir = textGenDir(name)
+    textArt.requireExists(name, "refresh")
+    val buckets = textArt.intParam(name, "buckets")
+    val positions = textIndexHasPositions(name)
     val cur = read(name)
     require(cur.columns.contains("payload"),
       s"REINDEX type=postings needs a payload column on $name")
-    val curKeys = cur.select(col("id"), md5(col("payload")).as("payload_md5"))
-    val indexed = liveDoclens(name)
-      .select(col("id"), col("payload_md5"), col("seg"))
-    // changed docs appear on BOTH sides: as an arrival (new md5 not
-    // indexed) and as a departure (old version's (id, seg) tombstoned).
-    // Both frames are DELTA-sized: materialize each ONCE (eager
-    // checkpoint) — without this, every downstream job (the segment
-    // writes, the tombstone swap, the emptiness checks) re-runs the
-    // whole corpus-vs-index diff, and the refresh pays the corpus pass
-    // it exists to avoid several times over (RefreshBench)
-    val arrivals = curKeys.join(indexed.select("id", "payload_md5"),
-      Seq("id", "payload_md5"), "left_anti").localCheckpoint(true)
-    val departures = indexed.join(curKeys, Seq("id", "payload_md5"),
-      "left_anti").select(col("id"), col("seg")).localCheckpoint(true)
-    if (!arrivals.isEmpty) {
-      val newRows = cur.join(broadcast(arrivals.select("id")), Seq("id"))
-      // coalesce: an artifact built over an empty collection has a
-      // 0-row doclens — max(seg) is null and the first real segment is 1
-      val nextSeg = readArtifact(new Path(genDir, "doclens"), DoclensSchema)
-        .agg(coalesce(max("seg"), lit(0)).as("m")).head().getInt(0) + 1
-      writeTextSegment(name, newRows, nextSeg, buckets,
-        positions = textIndexHasPositions(name), genDir = genDir)
+    textArt.refresh(name, cur, md5(col("payload"))) { (rows, seg, g) =>
+      writeTextSegment(rows, seg, buckets, positions, g)
     }
-    // tombstones: materialize the union BEFORE touching the old file
-    // (the copy-on-write swap discipline — never overwrite a path the
-    // plan still reads)
-    val tombPath = new Path(genDir, "tombstones")
-    if (!departures.isEmpty) {
-      val newTombs = tombstones(name).union(departures)
-      val tmp = new Path(genDir, "tombstones_tmp")
-      newTombs.write.mode("overwrite").option("compression", Compression)
-        .parquet(tmp.toString)
-      if (fs.exists(tombPath)) fs.delete(tombPath, true)
-      if (!fs.rename(tmp, tombPath))
-        throw new IllegalStateException(s"tombstone swap failed for $name")
-    }
-    GraftSqlShims.unpersistCheckpoint(arrivals)
-    GraftSqlShims.unpersistCheckpoint(departures)
-    fs.delete(textIndexStaleMarker(name), false)
     ()
   }
 
@@ -1268,68 +1216,18 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     * rows stop costing scan bytes at postings-read price, the classic
     * LSM/Lucene merge. Requires a LIVE artifact: a stale one doesn't
     * reflect the collection, and compacting it would only launder
-    * staleness — refresh (or rebuild) first, loudly.
-    *
-    * Crash discipline — GENERATION POINTER: the merged rows build in a
-    * fresh `gen_<g+1>/` directory while readers keep serving `gen_<g>`
-    * (compaction is ONLINE — no stale window); the single commit point
-    * is the meta.json overwrite that moves the pointer, after which the
-    * old generation (and any orphan from an earlier crash) is deleted.
-    * A crash before the flip leaves an orphan directory and an intact
-    * artifact; a crash after it leaves the new generation live and an
-    * unreferenced old directory — never a half-merged index serving.
+    * staleness — refresh (or rebuild) first, loudly. Online and
+    * crash-safe by the generation-pointer commit
+    * ([[SegmentedArtifact.compact]]).
     */
   def compactPostings(name: String): Unit = {
     requireCollection(name)
-    require(fs.exists(textIndexMetaPath(name)),
-      s"no postings artifact on $name to compact")
-    require(!fs.exists(textIndexStaleMarker(name)),
-      s"postings artifact on $name is stale — REINDEX type=postings " +
-        "(or mode=refresh) first, then compact")
-    val dir = textIndexDir(name)
-    val g = textIndexGen(name)
-    val genDir = textGenDir(name)
-    val nextDir = new Path(dir, s"gen_${g + 1}")
-    if (fs.exists(nextDir)) fs.delete(nextDir, true) // earlier crash orphan
-    val hasPos = textIndexHasPositions(name)
-    val buckets = parseTextIndexBuckets(
-      readString(fs, textIndexMetaPath(name)))
-    def live(sub: String, schema: StructType): DataFrame =
-      readArtifact(new Path(genDir, sub), schema)
-        .join(broadcast(tombstones(name)), Seq("id", "seg"), "left_anti")
-        .withColumn("seg", lit(0))
-    live("postings", PostingsSchema)
-      .write.mode("overwrite").option("compression", Compression)
-      .partitionBy("term_bucket")
-      .parquet(new Path(nextDir, "postings").toString)
-    live("doclens", DoclensSchema)
-      .write.mode("overwrite").option("compression", Compression)
-      .parquet(new Path(nextDir, "doclens").toString)
-    if (hasPos)
-      live("positions", PositionsSchema)
-        .write.mode("overwrite").option("compression", Compression)
-        .partitionBy("term_bucket")
-        .parquet(new Path(nextDir, "positions").toString)
-    // THE commit: one small-file overwrite moves the pointer
-    writeString(fs, textIndexMetaPath(name),
-      s"""{"type":"postings","buckets":$buckets,"positions":$hasPos,"gen":${g + 1}}""")
-    // best-effort cleanup of every generation but the live one (also
-    // sweeps orphans a crashed earlier compaction left behind)
-    Option(fs.listStatus(dir)).getOrElse(Array.empty).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("gen_") && n != s"gen_${g + 1}")
-        fs.delete(st.getPath, true)
-    }
-    ()
+    textArt.compact(name)
   }
 
   /** Whether the stored text index carries positional rows. */
-  private def textIndexHasPositions(name: String): Boolean = {
-    val meta = new Path(textIndexDir(name), "meta.json")
-    fs.exists(meta) &&
-      """"positions"\s*:\s*true""".r
-        .findFirstIn(readString(fs, meta)).isDefined
-  }
+  private def textIndexHasPositions(name: String): Boolean =
+    textArt.exists(name) && textArt.field(name, "positions").contains("true")
 
   /** SEARCHPHRASE — exact consecutive-token phrase match. With a LIVE
     * positional artifact (REINDEX type=postings;positions=true) the
@@ -1353,26 +1251,8 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       "[a-z0-9]+".r.findAllIn(t.toLowerCase))
     require(phrase.nonEmpty,
       s"no searchable phrase after normalization (got: ${rawPhrase.mkString(" ")})")
-    val tDir = textIndexDir(name)
-    val positional =
-      if (textIndexHasPositions(name) &&
-          !fs.exists(textIndexStaleMarker(name))) {
-        val buckets = parseTextIndexBuckets(
-          readString(fs, new Path(tDir, "meta.json")))
-        val wanted = phrase.map(bucketOfTerm(_, buckets)).distinct
-        readArtifact(new Path(textGenDir(name), "positions"),
-            PositionsSchema)
-          .filter(col("term_bucket").isin(wanted: _*) &&
-            col("term").isin(phrase.distinct: _*))
-          .join(broadcast(tombstones(name)), Seq("id", "seg"), "left_anti")
-      } else {
-        val cur = read(name)
-        require(cur.columns.contains("payload"),
-          s"SEARCHPHRASE needs a payload column on $name")
-        graft.operators.TextAnalysis
-          .invertedIndexPositional(cur, "id", "payload")
-      }
-    graft.operators.TextAnalysis.phraseHits(positional, "id", phrase)
+    graft.operators.TextAnalysis.phraseHits(
+        positional(name, phrase.distinct, "SEARCHPHRASE"), "id", phrase)
       .select(col("id"), col("n_hits"))
       .orderBy(desc("n_hits"), col("id"))
       .limit(k)
@@ -1397,160 +1277,41 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     require(terms.size >= 2,
       s"SEARCHPROXIMITY needs >= 2 distinct terms after normalization " +
         s"(got: ${rawTerms.mkString(", ")})")
-    val tDir = textIndexDir(name)
-    val positional =
-      if (textIndexHasPositions(name) &&
-          !fs.exists(textIndexStaleMarker(name))) {
-        val buckets = parseTextIndexBuckets(
-          readString(fs, new Path(tDir, "meta.json")))
-        val wanted = terms.map(bucketOfTerm(_, buckets)).distinct
-        readArtifact(new Path(textGenDir(name), "positions"),
-            PositionsSchema)
-          .filter(col("term_bucket").isin(wanted: _*) &&
-            col("term").isin(terms: _*))
-          .join(broadcast(tombstones(name)), Seq("id", "seg"), "left_anti")
-      } else {
-        val cur = read(name)
-        require(cur.columns.contains("payload"),
-          s"SEARCHPROXIMITY needs a payload column on $name")
-        graft.operators.TextAnalysis
-          .invertedIndexPositional(cur, "id", "payload")
-      }
-    graft.operators.TextAnalysis.minCoverSpans(positional, "id", terms)
+    graft.operators.TextAnalysis.minCoverSpans(
+        positional(name, terms, "SEARCHPROXIMITY"), "id", terms)
       .orderBy(col("min_span"), col("id"))
       .limit(k)
   }
 
-  /** The tombstones frame `(id, seg)` — empty when no version was ever
-    * replaced or deleted (anti-joining against it is then free).
+  /** Positional rows `(term, id, pos, ...)` for `terms`: the stored
+    * positions frame when it serves, else recomputed from the collection.
     */
-  private def tombstones(name: String): DataFrame =
-    readArtifact(new Path(textGenDir(name), "tombstones"), TombstonesSchema)
-
-  /** Doclens with dead versions filtered out — the live document set of
-    * the stored index (its row count and `dl` sum are the BM25 N and
-    * avgdl). The tombstone side is a broadcast anti-join: it holds one
-    * row per EVER-replaced version, orders of magnitude below doc count.
-    */
-  private def liveDoclens(name: String): DataFrame =
-    readArtifact(new Path(textGenDir(name), "doclens"), DoclensSchema)
-      .join(broadcast(tombstones(name)), Seq("id", "seg"), "left_anti")
-
-  private def textIndexDir(name: String): Path =
-    new Path(root, s"${ReservedPrefix}textindex_$name")
-
-  private def textIndexMetaPath(name: String): Path =
-    new Path(textIndexDir(name), "meta.json")
-
-  /** The artifact's current GENERATION — the pointer that makes
-    * compaction atomic: data lives under `gen_<g>/`, and the only
-    * commit point is the single meta.json overwrite that moves `g`.
-    * Readers resolve through the pointer, so they see the old
-    * generation until the new one is complete, and a crash mid-compact
-    * leaves an orphan directory, never a half-artifact.
-    */
-  private def textIndexGen(name: String): Int =
-    """"gen"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(readString(fs, textIndexMetaPath(name)))
-      .map(_.group(1).toInt).getOrElse(0)
-
-  private def textGenDir(name: String): Path =
-    new Path(textIndexDir(name), s"gen_${textIndexGen(name)}")
-
-  // artifact frame schemas — reads pass them EXPLICITLY, so a
-  // dynamic-partition directory holding zero data files (an empty
-  // segment write emits only _SUCCESS) reads back as the empty frame
-  // instead of failing schema inference
-  private val PostingsSchema = StructType.fromDDL(
-    "term STRING, id BIGINT, tf BIGINT, seg INT, term_bucket INT")
-  private val PositionsSchema = StructType.fromDDL(
-    "term STRING, id BIGINT, pos BIGINT, seg INT, term_bucket INT")
-  private val DoclensSchema = StructType.fromDDL(
-    "id BIGINT, dl BIGINT, payload_md5 STRING, seg INT")
-  private val TombstonesSchema = StructType.fromDDL("id BIGINT, seg INT")
-
-  /** Read an artifact frame with its declared schema; a missing
-    * directory is the empty frame (nothing was ever written there).
-    */
-  private def readArtifact(p: Path,
-      schema: StructType): DataFrame = {
-    if (fs.exists(p))
-      graft.operators.ScaleKnobs.withDriverListing(spark)(
-        spark.read.schema(schema).parquet(p.toString))
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-  }
-
-  private def textIndexStaleMarker(name: String): Path =
-    new Path(textIndexDir(name), "stale")
+  private def positional(name: String, terms: Seq[String],
+      command: String): DataFrame =
+    storedText(name, terms, "positions").map(_._1).getOrElse {
+      val cur = read(name)
+      require(cur.columns.contains("payload"),
+        s"$command needs a payload column on $name")
+      graft.operators.TextAnalysis.invertedIndexPositional(cur, "id", "payload")
+    }
 
   // ---- minhash signature artifact (ingest-time dedup screening) ---------
 
-  private def minhashDir(name: String): Path =
-    new Path(root, s"${ReservedPrefix}minhash_$name")
+  private def minhashParams(name: String): (Int, Int, Int) =
+    (minhashArt.intParam(name, "shingleN"),
+      minhashArt.intParam(name, "numHashes"),
+      minhashArt.intParam(name, "rowsPerBand"))
 
-  private def minhashStaleMarker(name: String): Path =
-    new Path(minhashDir(name), "stale")
-
-  private def minhashMetaPath(name: String): Path =
-    new Path(minhashDir(name), "meta.json")
-
-  private def minhashGen(name: String): Int =
-    """"gen"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(readString(fs, minhashMetaPath(name)))
-      .map(_.group(1).toInt).getOrElse(0)
-
-  private def minhashGenDir(name: String): Path =
-    new Path(minhashDir(name), s"gen_${minhashGen(name)}")
-
-  private val MinhashBandsSchema = StructType.fromDDL(
-    "id BIGINT, band_key STRING, seg INT, band INT, band_bucket INT")
-
-  private def minhashTombstones(name: String): DataFrame =
-    readArtifact(new Path(minhashGenDir(name), "tombstones"),
-      TombstonesSchema)
-
-  private def liveMinhashBands(name: String): DataFrame =
-    readArtifact(new Path(minhashGenDir(name), "bands"), MinhashBandsSchema)
-      .join(broadcast(minhashTombstones(name)), Seq("id", "seg"), "left_anti")
-      // band_bucket rides along: the probe derives the batch's bucket set
-      // from the same md5 slice and pushes it as a partition filter
-      .select("id", "band", "band_key", "band_bucket")
-
-  private def liveMinhashDocs(name: String): DataFrame =
-    readArtifact(new Path(minhashGenDir(name), "docs"), WinsigDocsSchema)
-      .join(broadcast(minhashTombstones(name)), Seq("id", "seg"), "left_anti")
-
-  private def minhashParams(name: String): (Int, Int, Int) = {
-    val meta = readString(fs, minhashMetaPath(name))
-    def intOf(k: String): Int =
-      s""""$k"\\s*:\\s*(\\d+)""".r.findFirstMatchIn(meta)
-        .map(_.group(1).toInt).getOrElse(throw new IllegalStateException(
-          s"minhash meta has no $k field: $meta"))
-    (intOf("shingleN"), intOf("numHashes"), intOf("rowsPerBand"))
-  }
-
-  // Missing buckets field = an artifact built before the derived
-  // sub-bucket layouts landed: its partition dirs have no band_bucket
-  // layer, so segments appended under the current layout would mix flat
-  // files with partition dirs (the round-11 discovery-conflict rule).
-  // The supported upgrade is a full rebuild — say so, actionably.
-  private def minhashBuckets(name: String): Int =
-    """"buckets"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(readString(fs, minhashMetaPath(name)))
-      .map(_.group(1).toInt).getOrElse(throw new IllegalStateException(
-        s"minhash meta on $name has no buckets field (artifact predates " +
-          "the bucketed layout) — run REINDEX type=minhash to rebuild " +
-          "before refresh/compact/screen"))
-
-  /** One segment append: banded signatures + the (id, payload_md5)
-    * diff-base rows for every doc in `rows` (short docs with no
-    * shingles included — the diff must see them).
+  /** One segment append: the (id, payload_md5) diff-base rows for every
+    * doc in `rows` (short docs with no shingles included — the diff must
+    * see them), then the banded signatures.
     */
-  private def writeMinhashSegment(name: String, rows: DataFrame,
-      shingleN: Int, numHashes: Int, rowsPerBand: Int, buckets: Int,
-      seg: Int, genDir: Path): Unit = {
-    graft.operators.Dedup.bandKeys(
+  private def writeMinhashSegment(rows: DataFrame, shingleN: Int,
+      numHashes: Int, rowsPerBand: Int, buckets: Int, seg: Int,
+      genDir: Path): Unit = {
+    minhashArt.write(rows.select(col("id"), md5(col("payload")).as("payload_md5"))
+      .withColumn("seg", lit(seg)), genDir, "docs")
+    minhashArt.write(graft.operators.Dedup.bandKeys(
         graft.operators.Dedup.minhashSignatures(
           graft.operators.Dedup.explodeShingles(
             rows, "id", "payload", shingleN),
@@ -1558,14 +1319,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
         "id", numHashes, rowsPerBand)
       .withColumn("band_bucket",
         graft.operators.Dedup.sigBucket(col("band_key"), buckets))
-      .withColumn("seg", lit(seg))
-      .write.mode("append").option("compression", Compression)
-      .partitionBy("band", "band_bucket")
-      .parquet(new Path(genDir, "bands").toString)
-    rows.select(col("id"), md5(col("payload")).as("payload_md5"))
-      .withColumn("seg", lit(seg))
-      .write.mode("append").option("compression", Compression)
-      .parquet(new Path(genDir, "docs").toString)
+      .withColumn("seg", lit(seg)), genDir, "bands")
   }
 
   /** REINDEX type=minhash — materialize the collection's banded MinHash
@@ -1576,7 +1330,8 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     * probe always hashes with the parameters the artifact was built
     * with (md5 keys from different parameters never collide). Same
     * segment/tombstone/generation lifecycle as the winsig and postings
-    * artifacts — [[refreshMinhash]] maintains it at delta price.
+    * artifacts ([[SegmentedArtifact]]) — [[refreshMinhash]] maintains it
+    * at delta price.
     */
   def reindexMinhash(name: String, shingleN: Int = 5, numHashes: Int = 8,
       rowsPerBand: Int = 2, buckets: Int = -1): Unit = {
@@ -1596,20 +1351,20 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       else buckets
     require(nBuckets >= 1 && 65536 % nBuckets == 0,
       s"minhash buckets must divide 65536, got $nBuckets")
-    val dir = minhashDir(name)
-    if (fs.exists(dir)) fs.delete(dir, true)
-    writeMinhashSegment(name, cur, shingleN, numHashes, rowsPerBand,
-      nBuckets, seg = 0, genDir = new Path(dir, "gen_0"))
-    writeString(fs, minhashMetaPath(name),
-      s"""{"type":"minhash","shingleN":$shingleN,"numHashes":$numHashes,"rowsPerBand":$rowsPerBand,"buckets":$nBuckets,"gen":0}""")
+    minhashArt.commit(name, s""","shingleN":$shingleN,"numHashes":$numHashes,"rowsPerBand":$rowsPerBand,"buckets":$nBuckets""") {
+      writeMinhashSegment(cur, shingleN, numHashes, rowsPerBand, nBuckets,
+        seg = 0, _)
+    }
   }
 
   /** REINDEX type=minhash;mode=refresh — incremental signature
-    * maintenance ([[refreshWinsig]]'s discipline on the band layout):
+    * maintenance ([[SegmentedArtifact.refresh]] on the band layout):
     * diff by `(id, payload_md5)`, shingle + minhash ONLY the
     * new/changed docs into a fresh segment, tombstone replaced/deleted
     * versions, clear the stale marker. Parameters come from the meta —
-    * the segment must hash in the family the artifact was built with.
+    * the segment must hash in the family the artifact was built with,
+    * and share the generation's bucket layout or the partition dirs
+    * diverge mid-artifact.
     *
     * Measured (RefreshBench, 1% delta): loses at 5k docs (1.37x — the
     * postings pattern, per-job overhead swamps the avoided hashing),
@@ -1618,79 +1373,27 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   def refreshMinhash(name: String): Unit = {
     requireCollection(name)
-    require(fs.exists(minhashMetaPath(name)),
-      s"no minhash artifact on $name to refresh — run REINDEX type=minhash first")
+    minhashArt.requireExists(name, "refresh")
     val (shingleN, numHashes, rowsPerBand) = minhashParams(name)
-    val genDir = minhashGenDir(name)
+    val buckets = minhashArt.intParam(name, "buckets")
     val cur = read(name)
     require(cur.columns.contains("payload"),
       s"REINDEX type=minhash needs a payload column on $name")
-    val curKeys = cur.select(col("id"), md5(col("payload")).as("payload_md5"))
-    val indexed = liveMinhashDocs(name)
-    val arrivals = curKeys.join(indexed.select("id", "payload_md5"),
-      Seq("id", "payload_md5"), "left_anti").localCheckpoint(true)
-    val departures = indexed.join(curKeys, Seq("id", "payload_md5"),
-      "left_anti").select(col("id"), col("seg")).localCheckpoint(true)
-    if (!arrivals.isEmpty) {
-      val newRows = cur.join(broadcast(arrivals.select("id")), Seq("id"))
-      val nextSeg = readArtifact(new Path(genDir, "docs"), WinsigDocsSchema)
-        .agg(coalesce(max("seg"), lit(0)).as("m")).head().getInt(0) + 1
-      // bucket count comes from the meta: every segment must share the
-      // generation's layout or the partition dirs diverge mid-artifact
-      writeMinhashSegment(name, newRows, shingleN, numHashes, rowsPerBand,
-        minhashBuckets(name), nextSeg, genDir)
+    minhashArt.refresh(name, cur, md5(col("payload"))) { (rows, seg, g) =>
+      writeMinhashSegment(rows, shingleN, numHashes, rowsPerBand, buckets,
+        seg, g)
     }
-    val tombPath = new Path(genDir, "tombstones")
-    if (!departures.isEmpty) {
-      val newTombs = minhashTombstones(name).union(departures)
-      val tmp = new Path(genDir, "tombstones_tmp")
-      newTombs.write.mode("overwrite").option("compression", Compression)
-        .parquet(tmp.toString)
-      if (fs.exists(tombPath)) fs.delete(tombPath, true)
-      if (!fs.rename(tmp, tombPath))
-        throw new IllegalStateException(s"minhash tombstone swap failed for $name")
-    }
-    GraftSqlShims.unpersistCheckpoint(arrivals)
-    GraftSqlShims.unpersistCheckpoint(departures)
-    fs.delete(minhashStaleMarker(name), false)
     ()
   }
 
   /** REINDEX type=minhash;mode=compact — merge segments to one flat
     * generation without re-hashing any text, committed by the single
-    * meta.json generation-pointer flip ([[compactPostings]]'s online
-    * crash discipline). Requires a LIVE artifact.
+    * meta.json generation-pointer flip ([[SegmentedArtifact.compact]]).
+    * Requires a LIVE artifact.
     */
   def compactMinhash(name: String): Unit = {
     requireCollection(name)
-    require(fs.exists(minhashMetaPath(name)),
-      s"no minhash artifact on $name to compact")
-    require(!fs.exists(minhashStaleMarker(name)),
-      s"minhash artifact on $name is stale — REINDEX type=minhash " +
-        "(or mode=refresh) first, then compact")
-    val dir = minhashDir(name)
-    val g = minhashGen(name)
-    val nextDir = new Path(dir, s"gen_${g + 1}")
-    if (fs.exists(nextDir)) fs.delete(nextDir, true)
-    val (shingleN, numHashes, rowsPerBand) = minhashParams(name)
-    val nBuckets = minhashBuckets(name)
-    readArtifact(new Path(minhashGenDir(name), "bands"), MinhashBandsSchema)
-      .join(broadcast(minhashTombstones(name)), Seq("id", "seg"), "left_anti")
-      .withColumn("seg", lit(0))
-      .write.mode("overwrite").option("compression", Compression)
-      .partitionBy("band", "band_bucket")
-      .parquet(new Path(nextDir, "bands").toString)
-    liveMinhashDocs(name).withColumn("seg", lit(0))
-      .write.mode("overwrite").option("compression", Compression)
-      .parquet(new Path(nextDir, "docs").toString)
-    writeString(fs, minhashMetaPath(name),
-      s"""{"type":"minhash","shingleN":$shingleN,"numHashes":$numHashes,"rowsPerBand":$rowsPerBand,"buckets":$nBuckets,"gen":${g + 1}}""")
-    Option(fs.listStatus(dir)).getOrElse(Array.empty).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("gen_") && n != s"gen_${g + 1}")
-        fs.delete(st.getPath, true)
-    }
-    ()
+    minhashArt.compact(name)
   }
 
   /** Screen an arriving batch (`id`, `payload`) for near-duplicates of
@@ -1712,8 +1415,8 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     require(batch.columns.contains("id") && batch.columns.contains("payload"),
       s"screen batch needs (id, payload) columns — got " +
         batch.columns.mkString("(", ", ", ")"))
-    val hasMeta = fs.exists(minhashMetaPath(name))
-    val live = hasMeta && !fs.exists(minhashStaleMarker(name))
+    val hasMeta = minhashArt.exists(name)
+    val live = minhashArt.isLive(name)
     // parameters come from the artifact's meta whenever one exists —
     // EVEN STALE: the fallback must screen with the same (shingleN,
     // hashes, bands) family the caller built, or the candidate sets
@@ -1725,8 +1428,11 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       // explicit schemas throughout the artifact reads: an artifact
       // built over an empty (or all-too-short-payload) collection has a
       // schemaless partitioned dir — inference would fail, the declared
-      // schema reads it empty
-      if (live) liveMinhashBands(name)
+      // schema reads it empty. band_bucket rides along: the probe
+      // derives the batch's bucket set from the same md5 slice and
+      // pushes it as a partition filter
+      if (live) minhashArt.liveRows(minhashArt.at(name), "bands")
+        .select("id", "band", "band_key", "band_bucket")
       else graft.operators.Materialize.corpusScale(
         graft.operators.Dedup.bandKeys(
         graft.operators.Dedup.minhashSignatures(
@@ -1752,22 +1458,8 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       // the stored layout's bucket count unlocks partition pruning in
       // the probe; the rescan fallback has no band_bucket column and
       // the operator's cap-and-switch simply ignores the knob then
-      corpusBuckets = if (live) minhashBuckets(name) else -1)
+      corpusBuckets = if (live) minhashArt.intParam(name, "buckets") else -1)
     finally if (!live) GraftSqlShims.unpersistCheckpoint(bands)
-  }
-
-  /** Mark the minhash artifact stale (mutations — a stale signature
-    * must never screen; [[screenDupes]] falls back to the in-query
-    * recompute). No-op when absent.
-    */
-  private def invalidateMinhashIndex(name: String): Unit = {
-    if (fs.exists(new Path(minhashDir(name), "meta.json")))
-      writeString(fs, minhashStaleMarker(name), "stale")
-  }
-
-  private def deleteMinhashIndex(name: String): Unit = {
-    val dir = minhashDir(name)
-    if (fs.exists(dir)) { fs.delete(dir, true); () }
   }
 
   // ---- managed split sidecar (leakage-safe split lifecycle) ---------------
@@ -1781,57 +1473,21 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
   // (and matched nothing older) still inherits yesterday's placement,
   // instead of falling back to its own-id slot one generation out.
 
-  private def splitsDir(name: String): Path =
-    new Path(root, s"${ReservedPrefix}splits_$name")
+  private def splitsParams(name: String): (Int, Int, Int) =
+    (splitsArt.intParam(name, "slots"), splitsArt.intParam(name, "val"),
+      splitsArt.intParam(name, "test"))
 
-  private def splitsMetaPath(name: String): Path =
-    new Path(splitsDir(name), "meta.json")
-
-  private def splitsGen(name: String): Int =
-    """"gen"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(readString(fs, splitsMetaPath(name)))
-      .map(_.group(1).toInt).getOrElse(0)
-
-  private def splitsGenDir(name: String): Path =
-    new Path(splitsDir(name), s"gen_${splitsGen(name)}")
-
-  private val SplitAssignSchema = StructType.fromDDL(
-    "id BIGINT, rep BIGINT, split STRING")
-
-  private def splitsParams(name: String): (Int, Int, Int) = {
-    val meta = readString(fs, splitsMetaPath(name))
-    def intOf(k: String): Int =
-      s""""$k"\\s*:\\s*(\\d+)""".r.findFirstMatchIn(meta)
-        .map(_.group(1).toInt).getOrElse(throw new IllegalStateException(
-          s"splits meta has no $k field: $meta"))
-    (intOf("slots"), intOf("val"), intOf("test"))
-  }
-
-  /** Edge family the sidecar was built with ("minhash"/"embedding";
-    * absent on pre-pin sidecars — treated as unpinned).
+  /** Edge family the sidecar was built with ("minhash", "embedding",
+    * "winsig", "dhash"; absent on pre-pin sidecars — treated as unpinned).
     */
   private def splitsFamilyOf(name: String): Option[String] =
-    """"family"\s*:\s*"([a-z]+)"""".r
-      .findFirstMatchIn(readString(fs, splitsMetaPath(name)))
-      .map(_.group(1))
+    splitsArt.field(name, "family")
 
-  /** Sign-bucket width of an embedding-family sidecar, if pinned. */
-  private def splitsBitsOf(name: String): Option[Int] =
-    """"bits"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(readString(fs, splitsMetaPath(name)))
-      .map(_.group(1).toInt)
-
-  /** Window width of a winsig-family sidecar, if pinned. */
-  private def splitsMinTokensOf(name: String): Option[Int] =
-    """"min_tokens"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(readString(fs, splitsMetaPath(name)))
-      .map(_.group(1).toInt)
-
-  /** Hamming radius of a dhash-family sidecar, if pinned. */
-  private def splitsMaxHammingOf(name: String): Option[Int] =
-    """"max_hamming"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(readString(fs, splitsMetaPath(name)))
-      .map(_.group(1).toInt)
+  /** The family's pinned signature parameter, if recorded: `bits`
+    * (embedding), `min_tokens` (winsig), `max_hamming` (dhash).
+    */
+  private def splitsPin(name: String, key: String): Option[Int] =
+    splitsArt.field(name, key).map(_.toInt)
 
   /** Committed ROUTE segment numbers of the current generation — only
     * MARKED segments are live. A crash mid-write leaves an unmarked
@@ -1839,8 +1495,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     * over ALL routed_* names), so the orphan sits inert until a
     * compactSplits / re-SPLIT sweeps the generation.
     */
-  private def splitRoutedSegs(name: String): Seq[Int] = {
-    val g = splitsGenDir(name)
+  private def splitRoutedSegs(g: Path): Seq[Int] =
     if (!fs.exists(g)) Seq.empty
     else fs.listStatus(g).toSeq.map(_.getPath.getName)
       .filter(n => n.startsWith("routed_") && n.endsWith(".done"))
@@ -1849,15 +1504,6 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       .flatMap(n => scala.util.Try(
         n.stripPrefix("routed_").stripSuffix(".done").toInt).toOption)
       .sorted
-  }
-
-  /** Compaction carry file for durable batch tags: compactSplits folds
-    * the routed segments (and their tag-bearing markers) away, so the
-    * applied-tag set is carried into the fresh generation as one
-    * newline-delimited file written BEFORE the meta pointer flips.
-    */
-  private def splitsBatchCarryPath(name: String): Path =
-    new Path(splitsGenDir(name), "_batches")
 
   /** Durable replay-idempotency record for ROUTE micro-batches: every
     * batch tag ever committed into the CURRENT generation — read from
@@ -1866,12 +1512,13 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     * compaction carry file. A checkpoint-restarted streaming screen
     * derives its skip set from THIS, not from driver memory, so a
     * replayed micro-batch is recognized across restarts instead of
-    * dying on the write-once refusal.
+    * dying on the write-once refusal. The carry file `_batches` is how
+    * compactSplits keeps the tags of the segments it folds away.
     */
   def routedBatchTags(name: String): Set[String] = {
     requireCollection(name)
-    if (!fs.exists(splitsMetaPath(name))) return Set.empty
-    val g = splitsGenDir(name)
+    if (!splitsArt.exists(name)) return Set.empty
+    val g = splitsArt.at(name)
     val tagRe = """"batch"\s*:\s*"([A-Za-z0-9_.-]+)"""".r
     val fromMarkers =
       if (!fs.exists(g)) Seq.empty[String]
@@ -1880,7 +1527,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
           p.getName.endsWith(".done"))
         .flatMap(p => tagRe.findFirstMatchIn(readString(fs, p))
           .map(_.group(1)))
-    val carry = splitsBatchCarryPath(name)
+    val carry = new Path(g, "_batches")
     val fromCarry =
       if (!fs.exists(carry)) Seq.empty[String]
       else readString(fs, carry).split('\n').toSeq
@@ -1910,7 +1557,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   def readmitRouted(name: String, batch: DataFrame): Long = {
     requireCollection(name)
-    require(fs.exists(splitsMetaPath(name)),
+    require(splitsArt.exists(name),
       s"no split sidecar on $name — nothing was ever routed")
     require(batch.columns.contains("id"),
       "readmitRouted batch needs an id column")
@@ -1931,7 +1578,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     val n = missing.count()
     if (n > 0L) {
       bulkInsert(name, missing)
-      if (fs.exists(minhashMetaPath(name))) refreshMinhash(name)
+      if (minhashArt.exists(name)) refreshMinhash(name)
     }
     n
   }
@@ -1943,11 +1590,11 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   def splitAssignments(name: String): DataFrame = {
     requireCollection(name)
-    require(fs.exists(splitsMetaPath(name)),
+    require(splitsArt.exists(name),
       s"no split sidecar on $name — run SPLIT first")
-    val g = splitsGenDir(name)
-    val base = readArtifact(new Path(g, "assign"), SplitAssignSchema)
-    val segs = splitRoutedSegs(name)
+    val g = splitsArt.at(name)
+    val base = splitsArt.read(g, "assign")
+    val segs = splitRoutedSegs(g)
     if (segs.isEmpty) base
     else base.unionByName(
       // ONE multi-path scan over every MARKED segment — a per-segment
@@ -1955,7 +1602,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       // thousands of admitted batches that's real analysis time);
       // unmarked orphans are excluded by construction (never globbed)
       graft.operators.ScaleKnobs.withDriverListing(spark)(
-        spark.read.schema(SplitAssignSchema)
+        spark.read.schema(splitsArt.family.frame("assign").schema)
           .parquet(segs.map(n => new Path(g, s"routed_$n").toString): _*)))
   }
 
@@ -1979,7 +1626,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     require(cur.columns.contains("payload"),
       s"SPLIT needs a payload column on $name (or use SPLIT by=embedding)")
     val (shingleN, numHashes, rowsPerBand) =
-      if (fs.exists(minhashMetaPath(name))) minhashParams(name) else (5, 8, 2)
+      if (minhashArt.exists(name)) minhashParams(name) else (5, 8, 2)
     val pairs = graft.operators.Dedup.minhashCandidates(
       cur, "id", "payload", shingleN, numHashes, rowsPerBand)
     commitSplitBase(name, cur, pairs, nSlots, valSlots, testSlots,
@@ -2048,7 +1695,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     require(cur.columns.contains("payload"),
       s"SPLIT by=winsig needs a payload column on $name")
     val stored: Option[Int] =
-      if (fs.exists(winsigMetaPath(name))) Some(winsigMinTokens(name))
+      if (winsigArt.exists(name)) Some(winsigArt.intParam(name, "minTokens"))
       else None
     val mt = (minTokens, stored) match {
       case (-1, Some(m)) => m
@@ -2060,9 +1707,10 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
         m
       case (m, None) => m
     }
-    val live = stored.isDefined && !fs.exists(winsigStaleMarker(name))
+    val live = stored.isDefined && winsigArt.isLive(name)
     val rows =
-      if (live) liveWinsigSigs(name).select(col("id"), col("win_sig"))
+      if (live) winsigArt.liveRows(winsigArt.at(name), "sigs")
+        .select(col("id"), col("win_sig"))
       else graft.operators.Dedup.windowSigRows(cur, "id", "payload", mt)
     val ok = rows.groupBy("win_sig").agg(count(lit(1)).as("__n"))
       .filter(col("__n") >= 2 && col("__n") <= maxBucketSize)
@@ -2090,7 +1738,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     requireCollection(name)
     val cur = read(name)
     val mc =
-      if (fs.exists(dhashMetaPath(name))) dhashMediaCol(name) else mediaCol
+      if (dhashArt.exists(name)) dhashArt.param(name, "mediaCol") else mediaCol
     require(cur.columns.contains(mc),
       s"SPLIT by=dhash needs a binary $mc column on $name")
     val pairs = graft.operators.Multimodal.dhashNearDups(
@@ -2108,20 +1756,10 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       testSlots: Int, extraMeta: String = ""): DataFrame = {
     val assign = graft.operators.TrainExport.leakageSafeSplit(
       cur, pairs, "id", nSlots, valSlots, testSlots)
-    val dir = splitsDir(name)
-    val g = if (fs.exists(splitsMetaPath(name))) splitsGen(name) + 1 else 0
-    val genDir = new Path(dir, s"gen_$g")
-    if (fs.exists(genDir)) fs.delete(genDir, true)
-    assign.select(col("id").cast("long").as("id"),
-        col("rep").cast("long").as("rep"), col("split"))
-      .write.mode("overwrite").option("compression", Compression)
-      .parquet(new Path(genDir, "assign").toString)
-    writeString(fs, splitsMetaPath(name),
-      s"""{"type":"splits","slots":$nSlots,"val":$valSlots,"test":$testSlots$extraMeta,"gen":$g}""")
-    // sweep superseded generations (the compactPostings orphan rule)
-    Option(fs.listStatus(dir)).getOrElse(Array.empty).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("gen_") && n != s"gen_$g") fs.delete(st.getPath, true)
+    splitsArt.commit(name,
+        s""","slots":$nSlots,"val":$valSlots,"test":$testSlots$extraMeta""") {
+      splitsArt.write(assign.select(col("id").cast("long").as("id"),
+        col("rep").cast("long").as("rep"), col("split")), _, "assign")
     }
     splitSummary(name)
   }
@@ -2141,11 +1779,11 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     * (the auto-compact policy's input — many small segments mean the
     * assignment read is a base + N-file union; `SPLIT mode=compact`
     * folds them, and ROUTE does it automatically past
-    * `spark.graft.splits.autoCompactSegments`).
+    * `spark.graft.artifacts.autoCompactSegments`).
     */
   def splitStats(name: String): DataFrame =
     splitSummary(name).withColumn("n_segments",
-      lit(splitRoutedSegs(name).size.toLong))
+      lit(splitRoutedSegs(splitsArt.at(name)).size.toLong))
 
   /** ROUTE — admit an arriving batch (`id`, `payload`) into the managed
     * split lifecycle: screen against the stored minhash bands
@@ -2181,7 +1819,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       batchTag: Option[String] = None,
       dryRun: Boolean = false): DataFrame = {
     requireCollection(name)
-    require(fs.exists(splitsMetaPath(name)),
+    require(splitsArt.exists(name),
       s"no split sidecar on $name — run SPLIT before ROUTE")
     require(batch.columns.contains("id") && batch.columns.contains("payload"),
       "ROUTE batch needs (id, payload) columns — got " +
@@ -2218,7 +1856,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
         graft.operators.ScaleKnobs.routeBroadcastMaxRows,
       dryRun: Boolean = false): DataFrame = {
     requireCollection(name)
-    require(fs.exists(splitsMetaPath(name)),
+    require(splitsArt.exists(name),
       s"no split sidecar on $name — run SPLIT before ROUTE")
     require(batch.columns.contains("id") &&
       batch.columns.contains("embedding"),
@@ -2241,7 +1879,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     // the sidecar's pinned signature width must match the layout the
     // screen is about to probe — a re-REINDEX at a different width
     // between SPLIT and ROUTE would silently change the edge family
-    splitsBitsOf(name).foreach(b => require(b == nBits,
+    splitsPin(name, "bits").foreach(b => require(b == nBits,
       s"the split sidecar on $name was built at $b sign bits but the " +
         s"stored layout now uses $nBits — re-SPLIT by=embedding (or " +
         "restore the layout) before routing"))
@@ -2300,7 +1938,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       insert: Boolean = true, batchTag: Option[String] = None,
       dryRun: Boolean = false, maxBucketSize: Int = 1000): DataFrame = {
     requireCollection(name)
-    require(fs.exists(splitsMetaPath(name)),
+    require(splitsArt.exists(name),
       s"no split sidecar on $name — run SPLIT before ROUTE")
     require(batch.columns.contains("id") && batch.columns.contains("payload"),
       "ROUTE by=winsig batch needs (id, payload) columns — got " +
@@ -2309,18 +1947,19 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       s"the split sidecar on $name was built by=$f — ROUTE by=winsig " +
         "would inherit through a different edge family; use the " +
         "matching ROUTE or re-SPLIT by=winsig"))
-    val mt = splitsMinTokensOf(name).getOrElse(15)
+    val mt = splitsPin(name, "min_tokens").getOrElse(15)
     // width drift between the sidecar and the artifact is a silent
     // family change — refuse (the splitsBitsOf doctrine)
-    if (fs.exists(winsigMetaPath(name)))
-      require(winsigMinTokens(name) == mt,
+    if (winsigArt.exists(name)) {
+      val stored = winsigArt.intParam(name, "minTokens")
+      require(stored == mt,
         s"the split sidecar on $name pins min_tokens=$mt but the winsig " +
-          s"artifact uses ${winsigMinTokens(name)} — re-SPLIT by=winsig " +
+          s"artifact uses $stored — re-SPLIT by=winsig " +
           "(or rebuild the artifact) before routing")
+    }
     val arriving = batch.select(col("id").cast("long").as("id"),
       col("payload"))
-    val live = fs.exists(winsigMetaPath(name)) &&
-      !fs.exists(winsigStaleMarker(name))
+    val live = winsigArt.isLive(name)
     // the batch's windows feed BOTH the bucket derivation and the probe
     // — checkpoint once (the incomingCoveredText discipline), release
     // after the routed frame (itself checkpointed) materializes
@@ -2328,11 +1967,11 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       arriving, "id", "payload", mt).localCheckpoint(true)
     val sRows =
       if (live) {
-        val nb = winsigBuckets(name)
+        val nb = winsigArt.intParam(name, "buckets")
         val bks = bRows.select(graft.operators.Dedup
             .sigBucket(col("win_sig"), nb).as("__sb"))
           .distinct().collect().map(_.getInt(0)).toSeq
-        val base = liveWinsigSigs(name)
+        val base = winsigArt.liveRows(winsigArt.at(name), "sigs")
         (if (bks.size < nb) base.filter(col("sig_bucket").isin(bks: _*))
          else base).select(col("id"), col("win_sig"))
       } else graft.operators.Materialize.corpusScale(
@@ -2358,7 +1997,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     try {
       val out = routeCore(name, batch, arriving, matches, insert,
         refreshBands = false, batchTag, dryRun)
-      if (insert && !dryRun && fs.exists(winsigMetaPath(name)))
+      if (insert && !dryRun && winsigArt.exists(name))
         refreshWinsig(name)
       out
     } finally {
@@ -2380,21 +2019,20 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       insert: Boolean = true, batchTag: Option[String] = None,
       dryRun: Boolean = false): DataFrame = {
     requireCollection(name)
-    require(fs.exists(splitsMetaPath(name)),
+    require(splitsArt.exists(name),
       s"no split sidecar on $name — run SPLIT before ROUTE")
     splitsFamilyOf(name).foreach(f => require(f == "dhash",
       s"the split sidecar on $name was built by=$f — ROUTE by=dhash " +
         "would inherit through a different edge family; use the " +
         "matching ROUTE or re-SPLIT by=dhash"))
-    val mh = splitsMaxHammingOf(name).getOrElse(6)
+    val mh = splitsPin(name, "max_hamming").getOrElse(6)
     val mc =
-      if (fs.exists(dhashMetaPath(name))) dhashMediaCol(name) else "media"
+      if (dhashArt.exists(name)) dhashArt.param(name, "mediaCol") else "media"
     require(batch.columns.contains("id") && batch.columns.contains(mc),
       s"ROUTE by=dhash batch needs (id, $mc) columns — got " +
         batch.columns.mkString("(", ", ", ")"))
     val arriving = batch.select(col("id").cast("long").as("id"), col(mc))
-    val wasLive = fs.exists(dhashMetaPath(name)) &&
-      !fs.exists(dhashStaleMarker(name))
+    val wasLive = dhashArt.isLive(name)
     val matches = screenImages(name, batch, mc, maxHamming = mh)
       .select("a_id", "b_id")
     val out = routeCore(name, batch, arriving, matches, insert,
@@ -2404,13 +2042,10 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       // rows, then clear the stale marker the insert just set — valid
       // ONLY because the artifact was live before this ROUTE (a marker
       // predating us must stay)
-      graft.operators.Multimodal.dhashBands(
-          arriving, "id", mc, dhashBuckets(name))
-        .write.mode("append").option("compression", Compression)
-        .partitionBy("band", "key_bucket")
-        .parquet(new Path(dhashDir(name), "bands").toString)
-      fs.delete(dhashStaleMarker(name), false)
-      ()
+      dhashArt.write(graft.operators.Multimodal.dhashBands(
+          arriving, "id", mc, dhashArt.intParam(name, "buckets")),
+        dhashArt.at(name), "bands")
+      dhashArt.clearStale(name)
     }
     out
   }
@@ -2508,7 +2143,8 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     // SAME refusals, but NOTHING commits — the capacity-planning /
     // steady-state-bench shape ("what would this batch's placement be")
     if (dryRun) return routed.orderBy("id")
-    val g = splitsGenDir(name)
+    val g = splitsArt.at(name)
+    // numbering skips past every routed_* name, marked or orphaned
     val existing = Option(
         if (fs.exists(g)) fs.listStatus(g) else null)
       .getOrElse(Array.empty).toSeq.map(_.getPath.getName)
@@ -2516,36 +2152,29 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       .map(_.stripPrefix("routed_").stripSuffix(".done"))
       .flatMap(n => scala.util.Try(n.toInt).toOption)
     val seg = if (existing.isEmpty) 0 else existing.max + 1
-    routed.select(col("id"), col("rep"), col("split"))
-      .write.mode("overwrite").option("compression", Compression)
-      .parquet(new Path(g, s"routed_$seg").toString)
+    splitsArt.write(routed.select(col("id"), col("rep"), col("split")), g,
+      s"routed_$seg")
     // the marker write IS the commit — a batch tag rides in its content,
     // so "this micro-batch committed" and "these assignments are live"
     // are ONE atomic durable fact (no tag→data crash window at all)
-    writeString(fs, new Path(g, s"routed_$seg.done"),
+    splitsArt.writeFile(g, s"routed_$seg.done",
       batchTag.map(t => s"""{"batch":"$t"}""").getOrElse(""))
-    // segment-growth hygiene: past the threshold the assignment read is
-    // a base + N-small-file union — fold it NOW (content-preserving,
-    // batch tags carried; one extra read+write of assignment-grain rows,
-    // never a re-screen). 0 disables; the default keeps per-batch cost
-    // amortized to ~1/64 of a compaction.
-    val autoAfter = spark.conf
-      .getOption("spark.graft.splits.autoCompactSegments")
-      .map(_.toInt).getOrElse(64)
-    if (autoAfter > 0 && splitRoutedSegs(name).size > autoAfter)
+    // segment-growth hygiene: past the shared auto-compact threshold the
+    // assignment read is a base + N-small-file union — fold it NOW
+    // (content-preserving, batch tags carried, never a re-screen)
+    if (splitsArt.autoCompactDue(splitRoutedSegs(g).size))
       compactSplits(name)
     // capture BEFORE the insert: bulkInsert marks the attrs sidecar
     // stale, and a marker that PREDATES this ROUTE must stay (the dhash
     // delta-admission rule — clearing it would hide someone else's
     // un-healed mutation)
-    val attrsLiveBefore = fs.exists(attrsMetaPath(name)) &&
-      !fs.exists(attrsStaleMarker(name))
+    val attrsLiveBefore = attrsArt.isLive(name)
     if (insert) {
       bulkInsert(name, batch)
       // minhash bands live in a separate artifact needing a refresh; the
       // sign layout derives at append (no artifact = the rescan fallback
       // already sees collection rows directly)
-      if (refreshBands && fs.exists(minhashMetaPath(name)))
+      if (refreshBands && minhashArt.exists(name))
         refreshMinhash(name)
       // a live attribute sidecar stays current through admissions too
       // (every stored artifact maintains incrementally). DELTA admission:
@@ -2555,13 +2184,12 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       // cost stays batch-sized, where the full refresh would pay two
       // collection-scale anti-joins per micro-batch.
       if (attrsLiveBefore) {
-        val gA = attrsGenDir(name)
-        val nextSeg = nextAttrsSeg(name, gA)
-        writeAttrsSegment(name, align(name, batch), nextSeg, gA)
-        recordAttrsSeg(name, nextSeg)
-        fs.delete(attrsStaleMarker(name), false)
-        maybeAutoCompactAttrs(name, nextSeg)
-      } else if (fs.exists(attrsMetaPath(name)))
+        val seg = attrsArt.appendSegment(name) { (s, gA) =>
+          attrsArt.write(attrRows(align(name, batch), s), gA, "attrs")
+        }
+        attrsArt.clearStale(name)
+        maybeAutoCompactAttrs(name, seg)
+      } else if (attrsArt.exists(name))
         // an already-stale sidecar needs the full diff heal anyway
         refreshAttrs(name)
     }
@@ -2577,44 +2205,19 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   def compactSplits(name: String): Unit = {
     requireCollection(name)
-    require(fs.exists(splitsMetaPath(name)),
-      s"no split sidecar on $name to compact — run SPLIT first")
-    val (nSlots, valSlots, testSlots) = splitsParams(name)
-    // the family/bits pins are part of the artifact's identity — a
-    // compaction must carry them into the new meta verbatim
-    val carried =
-      splitsFamilyOf(name).map(f => s""","family":"$f"""").getOrElse("") +
-      splitsBitsOf(name).map(b => s""","bits":$b""").getOrElse("")
-    val dir = splitsDir(name)
-    val g = splitsGen(name) + 1
-    val genDir = new Path(dir, s"gen_$g")
-    if (fs.exists(genDir)) fs.delete(genDir, true)
-    // reads the OLD generation, writes the NEW one, then the pointer
-    // flips — readers serve gen g−1 until the flip, a crash leaves an
-    // orphan dir, never a half-artifact
-    splitAssignments(name)
-      .write.mode("overwrite").option("compression", Compression)
-      .parquet(new Path(genDir, "assign").toString)
-    // durable batch tags survive compaction: the markers fold away with
-    // their segments, so their tags carry as one file in the new gen —
-    // written BEFORE the pointer flip (the gen dir must be complete
-    // when it becomes visible)
-    val tags = routedBatchTags(name)
-    if (tags.nonEmpty)
-      writeString(fs, new Path(genDir, "_batches"),
-        tags.toSeq.sorted.mkString("\n"))
-    writeString(fs, splitsMetaPath(name),
-      s"""{"type":"splits","slots":$nSlots,"val":$valSlots,"test":$testSlots$carried,"gen":$g}""")
-    Option(fs.listStatus(dir)).getOrElse(Array.empty).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("gen_") && n != s"gen_$g") fs.delete(st.getPath, true)
+    splitsArt.requireExists(name, "compact")
+    // the closure reads the OLD generation and fills the NEW one; the
+    // pins (family, bits, ...) carry into the new meta verbatim
+    splitsArt.commit(name, splitsArt.carriedFields(name)) { g =>
+      splitsArt.write(splitAssignments(name), g, "assign")
+      // durable batch tags survive compaction: the markers fold away
+      // with their segments, so their tags carry as one file in the new
+      // gen — written BEFORE the pointer flip (the gen dir must be
+      // complete when it becomes visible)
+      val tags = routedBatchTags(name)
+      if (tags.nonEmpty)
+        splitsArt.writeFile(g, "_batches", tags.toSeq.sorted.mkString("\n"))
     }
-    ()
-  }
-
-  private def deleteSplitsSidecar(name: String): Unit = {
-    val dir = splitsDir(name)
-    if (fs.exists(dir)) { fs.delete(dir, true); () }
   }
 
   // ---- durable micro-batch application log (sink-side idempotency) -------
@@ -2653,65 +2256,26 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
 
   // ---- window-signature artifact (exact-substring ingest screening) ------
   //
-  // Same lifecycle machinery as the text index: id-attributed rows in
-  // SEGMENTS under a GENERATION pointer, (id, seg) tombstones, a docs
-  // diff base keyed by payload_md5 — so the artifact refreshes at
+  // Same lifecycle as the text index ([[SegmentedArtifact]]): id-attributed
+  // rows in SEGMENTS under a GENERATION pointer, (id, seg) tombstones, a
+  // docs diff base keyed by payload_md5 — so the artifact refreshes at
   // delta price, compacts online, and a signature keeps screening as
   // long as ANY live document carries it.
 
-  private def winsigDir(name: String): Path =
-    new Path(root, s"${ReservedPrefix}winsig_$name")
-
-  private def winsigMetaPath(name: String): Path =
-    new Path(winsigDir(name), "meta.json")
-
-  private def winsigStaleMarker(name: String): Path =
-    new Path(winsigDir(name), "stale")
-
-  private def winsigGen(name: String): Int =
-    """"gen"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(readString(fs, winsigMetaPath(name)))
-      .map(_.group(1).toInt).getOrElse(0)
-
-  private def winsigGenDir(name: String): Path =
-    new Path(winsigDir(name), s"gen_${winsigGen(name)}")
-
-  private val WinsigSigsSchema = StructType.fromDDL(
-    "id BIGINT, win_sig STRING, seg INT, sig_bucket INT")
-  private val WinsigDocsSchema = StructType.fromDDL(
-    "id BIGINT, payload_md5 STRING, seg INT")
-
-  private def winsigTombstones(name: String): DataFrame =
-    readArtifact(new Path(winsigGenDir(name), "tombstones"),
-      TombstonesSchema)
-
-  /** Live (untombstoned) stored signature rows. */
-  private def liveWinsigSigs(name: String): DataFrame =
-    readArtifact(new Path(winsigGenDir(name), "sigs"), WinsigSigsSchema)
-      .join(broadcast(winsigTombstones(name)), Seq("id", "seg"), "left_anti")
-
-  private def liveWinsigDocs(name: String): DataFrame =
-    readArtifact(new Path(winsigGenDir(name), "docs"), WinsigDocsSchema)
-      .join(broadcast(winsigTombstones(name)), Seq("id", "seg"), "left_anti")
-
-  /** One segment append: per-doc distinct window sigs + the (id,
-    * payload_md5) diff-base rows for EVERY doc in `rows` (window-less
-    * short docs included — the diff must see them or they re-arrive on
-    * every refresh).
+  /** One segment append: the (id, payload_md5) diff-base rows for EVERY
+    * doc in `rows` (window-less short docs included — the diff must see
+    * them or they re-arrive on every refresh), then the per-doc distinct
+    * window sigs.
     */
-  private def writeWinsigSegment(name: String, rows: DataFrame,
-      minTokens: Int, buckets: Int, seg: Int, genDir: Path): Unit = {
-    graft.operators.Dedup.windowSigRows(rows, "id", "payload", minTokens)
-      .withColumn("sig_bucket",
-        graft.operators.Dedup.sigBucket(col("win_sig"), buckets))
-      .withColumn("seg", lit(seg))
-      .write.mode("append").option("compression", Compression)
-      .partitionBy("sig_bucket")
-      .parquet(new Path(genDir, "sigs").toString)
-    rows.select(col("id"), md5(col("payload")).as("payload_md5"))
-      .withColumn("seg", lit(seg))
-      .write.mode("append").option("compression", Compression)
-      .parquet(new Path(genDir, "docs").toString)
+  private def writeWinsigSegment(rows: DataFrame, minTokens: Int,
+      buckets: Int, seg: Int, genDir: Path): Unit = {
+    winsigArt.write(rows.select(col("id"), md5(col("payload")).as("payload_md5"))
+      .withColumn("seg", lit(seg)), genDir, "docs")
+    winsigArt.write(
+      graft.operators.Dedup.windowSigRows(rows, "id", "payload", minTokens)
+        .withColumn("sig_bucket",
+          graft.operators.Dedup.sigBucket(col("win_sig"), buckets))
+        .withColumn("seg", lit(seg)), genDir, "sigs")
   }
 
   /** REINDEX type=winsig — materialize the collection's per-doc window
@@ -2737,17 +2301,14 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       else buckets
     require(nBuckets >= 1 && 65536 % nBuckets == 0,
       s"winsig buckets must divide 65536, got $nBuckets")
-    val dir = winsigDir(name)
-    if (fs.exists(dir)) fs.delete(dir, true)
-    writeWinsigSegment(name, cur, minTokens, nBuckets, seg = 0,
-      genDir = new Path(dir, "gen_0"))
-    writeString(fs, winsigMetaPath(name),
-      s"""{"type":"winsig","minTokens":$minTokens,"buckets":$nBuckets,"gen":0}""")
+    winsigArt.commit(name, s""","minTokens":$minTokens,"buckets":$nBuckets""") {
+      writeWinsigSegment(cur, minTokens, nBuckets, seg = 0, _)
+    }
   }
 
   /** REINDEX type=winsig;mode=refresh — incremental screening-artifact
-    * maintenance ([[refreshPostings]]'s discipline on the winsig
-    * layout): diff the collection against the stored docs rows by
+    * maintenance ([[SegmentedArtifact.refresh]] on the winsig layout):
+    * diff the collection against the stored docs rows by
     * `(id, payload_md5)`, window ONLY the new/changed documents into a
     * fresh segment, tombstone the replaced/deleted versions, clear the
     * stale marker. The expensive pass (tokenize + window md5s) touches
@@ -2760,93 +2321,28 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   def refreshWinsig(name: String): Unit = {
     requireCollection(name)
-    require(fs.exists(winsigMetaPath(name)),
-      s"no winsig artifact on $name to refresh — run REINDEX type=winsig first")
-    val minTokens = winsigMinTokens(name)
-    val genDir = winsigGenDir(name)
+    winsigArt.requireExists(name, "refresh")
+    val minTokens = winsigArt.intParam(name, "minTokens")
+    val buckets = winsigArt.intParam(name, "buckets")
     val cur = read(name)
     require(cur.columns.contains("payload"),
       s"REINDEX type=winsig needs a payload column on $name")
-    val curKeys = cur.select(col("id"), md5(col("payload")).as("payload_md5"))
-    val indexed = liveWinsigDocs(name)
-    val arrivals = curKeys.join(indexed.select("id", "payload_md5"),
-      Seq("id", "payload_md5"), "left_anti").localCheckpoint(true)
-    val departures = indexed.join(curKeys, Seq("id", "payload_md5"),
-      "left_anti").select(col("id"), col("seg")).localCheckpoint(true)
-    if (!arrivals.isEmpty) {
-      val newRows = cur.join(broadcast(arrivals.select("id")), Seq("id"))
-      val nextSeg = readArtifact(new Path(genDir, "docs"), WinsigDocsSchema)
-        .agg(coalesce(max("seg"), lit(0)).as("m")).head().getInt(0) + 1
-      writeWinsigSegment(name, newRows, minTokens, winsigBuckets(name),
-        nextSeg, genDir)
+    winsigArt.refresh(name, cur, md5(col("payload"))) { (rows, seg, g) =>
+      writeWinsigSegment(rows, minTokens, buckets, seg, g)
     }
-    val tombPath = new Path(genDir, "tombstones")
-    if (!departures.isEmpty) {
-      val newTombs = winsigTombstones(name).union(departures)
-      val tmp = new Path(genDir, "tombstones_tmp")
-      newTombs.write.mode("overwrite").option("compression", Compression)
-        .parquet(tmp.toString)
-      if (fs.exists(tombPath)) fs.delete(tombPath, true)
-      if (!fs.rename(tmp, tombPath))
-        throw new IllegalStateException(s"winsig tombstone swap failed for $name")
-    }
-    GraftSqlShims.unpersistCheckpoint(arrivals)
-    GraftSqlShims.unpersistCheckpoint(departures)
-    fs.delete(winsigStaleMarker(name), false)
     ()
   }
 
   /** REINDEX type=winsig;mode=compact — merge the segmented artifact to
     * ONE flat generation without re-windowing any text (tombstones
     * apply, rows rewrite as seg 0), committed by the single meta.json
-    * generation-pointer flip ([[compactPostings]]'s online crash
-    * discipline). Requires a LIVE artifact — compacting a stale one
-    * would launder staleness.
+    * generation-pointer flip ([[SegmentedArtifact.compact]]). Requires a
+    * LIVE artifact — compacting a stale one would launder staleness.
     */
   def compactWinsig(name: String): Unit = {
     requireCollection(name)
-    require(fs.exists(winsigMetaPath(name)),
-      s"no winsig artifact on $name to compact")
-    require(!fs.exists(winsigStaleMarker(name)),
-      s"winsig artifact on $name is stale — REINDEX type=winsig " +
-        "(or mode=refresh) first, then compact")
-    val dir = winsigDir(name)
-    val g = winsigGen(name)
-    val nextDir = new Path(dir, s"gen_${g + 1}")
-    if (fs.exists(nextDir)) fs.delete(nextDir, true)
-    val minTokens = winsigMinTokens(name)
-    val nBuckets = winsigBuckets(name)
-    liveWinsigSigs(name).withColumn("seg", lit(0))
-      .write.mode("overwrite").option("compression", Compression)
-      .partitionBy("sig_bucket")
-      .parquet(new Path(nextDir, "sigs").toString)
-    liveWinsigDocs(name).withColumn("seg", lit(0))
-      .write.mode("overwrite").option("compression", Compression)
-      .parquet(new Path(nextDir, "docs").toString)
-    writeString(fs, winsigMetaPath(name),
-      s"""{"type":"winsig","minTokens":$minTokens,"buckets":$nBuckets,"gen":${g + 1}}""")
-    Option(fs.listStatus(dir)).getOrElse(Array.empty).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("gen_") && n != s"gen_${g + 1}")
-        fs.delete(st.getPath, true)
-    }
-    ()
+    winsigArt.compact(name)
   }
-
-  private def winsigMinTokens(name: String): Int =
-    """"minTokens"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(readString(fs, winsigMetaPath(name)))
-      .map(_.group(1).toInt).getOrElse(throw new IllegalStateException(
-        s"winsig meta has no minTokens field on $name"))
-
-  // same pre-upgrade contract as minhashBuckets: full rebuild, loudly
-  private def winsigBuckets(name: String): Int =
-    """"buckets"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(readString(fs, winsigMetaPath(name)))
-      .map(_.group(1).toInt).getOrElse(throw new IllegalStateException(
-        s"winsig meta on $name has no buckets field (artifact predates " +
-          "the bucketed layout) — run REINDEX type=winsig to rebuild " +
-          "before refresh/compact/screen"))
 
   /** Scrub an arriving batch (`id`, `payload`) of every token position
     * covered by a >= minTokens-token window already present in the
@@ -2870,60 +2366,23 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     require(batch.columns.contains("id") && batch.columns.contains("payload"),
       s"screen batch needs (id, payload) columns — got " +
         batch.columns.mkString("(", ", ", ")"))
-    val hasMeta = fs.exists(winsigMetaPath(name))
-    val live = hasMeta && !fs.exists(winsigStaleMarker(name))
+    val hasMeta = winsigArt.exists(name)
+    val live = winsigArt.isLive(name)
     val minTokens =
-      if (hasMeta) winsigMinTokens(name) else defaultMinTokens
+      if (hasMeta) winsigArt.intParam(name, "minTokens") else defaultMinTokens
     val sigs =
       // explicit schemas throughout the artifact reads: an artifact
       // built over an empty (or all-too-short-payload) collection still
       // reads as an empty frame
-      if (live) liveWinsigSigs(name).select("win_sig", "sig_bucket")
+      if (live) winsigArt.liveRows(winsigArt.at(name), "sigs")
+        .select("win_sig", "sig_bucket")
       else graft.operators.Dedup.windowSigs(cur, "id", "payload", minTokens)
     graft.operators.Dedup.incomingCoveredText(sigs, batch,
       "id", "payload", minTokens,
-      corpusBuckets = if (live) winsigBuckets(name) else -1)
-  }
-
-  /** Mark the winsig artifact stale (mutations — a stale signature table
-    * must never screen; [[screenSubstrings]] falls back to the in-query
-    * recompute). No-op when absent.
-    */
-  private def invalidateWinsigIndex(name: String): Unit = {
-    if (fs.exists(new Path(winsigDir(name), "meta.json")))
-      writeString(fs, winsigStaleMarker(name), "stale")
-  }
-
-  private def deleteWinsigIndex(name: String): Unit = {
-    val dir = winsigDir(name)
-    if (fs.exists(dir)) { fs.delete(dir, true); () }
+      corpusBuckets = if (live) winsigArt.intParam(name, "buckets") else -1)
   }
 
   // ---- dhash signature artifact (ingest-time perceptual screening) ------
-
-  private def dhashDir(name: String): Path =
-    new Path(root, s"${ReservedPrefix}dhash_$name")
-
-  private def dhashStaleMarker(name: String): Path =
-    new Path(dhashDir(name), "stale")
-
-  private def dhashMetaPath(name: String): Path =
-    new Path(dhashDir(name), "meta.json")
-
-  private val DhashBandsSchema = StructType.fromDDL(
-    "id BIGINT, sig BIGINT, band INT, key BIGINT, key_bucket INT")
-
-  private def dhashBuckets(name: String): Int =
-    """"buckets"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(readString(fs, dhashMetaPath(name)))
-      .map(_.group(1).toInt).getOrElse(throw new IllegalStateException(
-        s"dhash meta on $name has no buckets field"))
-
-  private def dhashMediaCol(name: String): String =
-    """"mediaCol"\s*:\s*"([^"]+)"""".r
-      .findFirstMatchIn(readString(fs, dhashMetaPath(name)))
-      .map(_.group(1)).getOrElse(throw new IllegalStateException(
-        s"dhash meta on $name has no mediaCol field"))
 
   /** REINDEX type=dhash — materialize the collection's banded dHash56
     * signatures ([[graft.operators.Multimodal.dhashBands]] over the
@@ -2953,15 +2412,11 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       else buckets
     require(nBuckets >= 1 && 16384 % nBuckets == 0,
       s"dhash buckets must divide 16384 (14-bit keys), got $nBuckets")
-    val dir = dhashDir(name)
-    if (fs.exists(dir)) fs.delete(dir, true)
-    graft.operators.Multimodal.dhashBands(
-        cur.select(col("id"), col(mediaCol)), "id", mediaCol, nBuckets)
-      .write.mode("overwrite").option("compression", Compression)
-      .partitionBy("band", "key_bucket")
-      .parquet(new Path(dir, "bands").toString)
-    writeString(fs, dhashMetaPath(name),
-      s"""{"type":"dhash","mediaCol":"$mediaCol","buckets":$nBuckets}""")
+    dhashArt.commit(name, s""","mediaCol":"$mediaCol","buckets":$nBuckets""") {
+      dhashArt.write(graft.operators.Multimodal.dhashBands(
+        cur.select(col("id"), col(mediaCol)), "id", mediaCol, nBuckets), _,
+        "bands")
+    }
   }
 
   /** Screen an arriving image batch (`id`, media) for perceptual
@@ -2982,9 +2437,9 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       maxBucketSize: Int = 1000): DataFrame = {
     requireCollection(name)
     val cur = read(name)
-    val hasMeta = fs.exists(dhashMetaPath(name))
-    val live = hasMeta && !fs.exists(dhashStaleMarker(name))
-    val mc = if (hasMeta) dhashMediaCol(name) else mediaCol
+    val hasMeta = dhashArt.exists(name)
+    val live = dhashArt.isLive(name)
+    val mc = if (hasMeta) dhashArt.param(name, "mediaCol") else mediaCol
     require(cur.columns.contains(mc),
       s"SCREEN needs a binary $mc column on $name")
     require(batch.columns.contains("id") && batch.columns.contains(mc),
@@ -2993,9 +2448,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     val bands =
       // explicit schema: an artifact over an empty collection has a
       // schemaless partitioned dir — the declared schema reads it empty
-      if (live) graft.operators.ScaleKnobs.withDriverListing(spark)(
-        spark.read.schema(DhashBandsSchema)
-          .parquet(new Path(dhashDir(name), "bands").toString))
+      if (live) dhashArt.read(dhashArt.at(name), "bands")
       else graft.operators.Materialize.corpusScale(
         graft.operators.Multimodal.dhashBands(
           cur.select(col("id"), col(mc)), "id", mc)
@@ -3008,7 +2461,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       )
     val out = graft.operators.Multimodal.incomingDhashDups(bands, batch,
       "id", mc, maxHamming, maxBucketSize,
-      corpusBuckets = if (live) dhashBuckets(name) else -1)
+      corpusBuckets = if (live) dhashArt.intParam(name, "buckets") else -1)
     if (live) out
     else
       // finally: the fallback band seam is freed on success AND on a
@@ -3016,20 +2469,6 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       // leak a corpus-sized block set for the session)
       try out.localCheckpoint(true)
       finally GraftSqlShims.unpersistCheckpoint(bands)
-  }
-
-  /** Mark the dhash artifact stale (mutations — a stale signature must
-    * never screen; [[screenImages]] falls back to the in-query
-    * recompute). No-op when absent.
-    */
-  private def invalidateDhashIndex(name: String): Unit = {
-    if (fs.exists(dhashMetaPath(name)))
-      writeString(fs, dhashStaleMarker(name), "stale")
-  }
-
-  private def deleteDhashIndex(name: String): Unit = {
-    val dir = dhashDir(name)
-    if (fs.exists(dir)) { fs.delete(dir, true); () }
   }
 
   // ---- attribute sidecar (TAG: tag once, filter many) --------------------
@@ -3042,68 +2481,18 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
   // dominant cost, so "tag once, filter many" is the difference between one
   // corpus pass total and one per filter predicate tried.
   //
-  // Same lifecycle discipline as the minhash/winsig artifacts: generation
-  // pointer in meta.json, segment + tombstone incremental maintenance
-  // diffed on (id, payload_md5) — so UPDATEd payloads re-tag and DELETEd
-  // docs tombstone at delta price — and a stale marker every mutation sets.
-  // Unlike the screens (which silently fall back to an in-query recompute,
-  // values identical), the attrs CONSUMER refuses a stale artifact loudly:
-  // a silent full-corpus re-scoring is exactly the cost this sidecar
-  // exists to avoid, and at scale it must never happen by accident (the
-  // unindexed-decon refusal doctrine).
-
-  private def attrsDir(name: String): Path =
-    new Path(root, s"${ReservedPrefix}attrs_$name")
-
-  private def attrsMetaPath(name: String): Path =
-    new Path(attrsDir(name), "meta.json")
-
-  private def attrsStaleMarker(name: String): Path =
-    new Path(attrsDir(name), "stale")
-
-  private def attrsGen(name: String): Int =
-    """"gen"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(readString(fs, attrsMetaPath(name)))
-      .map(_.group(1).toInt).getOrElse(0)
-
-  private def attrsGenDir(name: String): Path =
-    new Path(attrsDir(name), s"gen_${attrsGen(name)}")
-
-  private val AttrsSchema = StructType.fromDDL(
-    "id BIGINT, payload_md5 STRING, n_tokens BIGINT, lang STRING, " +
-      "quality DOUBLE, n_pii BIGINT, seg INT")
-
-  /** The meta's high-water segment number, when the sidecar records one
-    * (sidecars from before the hint fall back to the artifact scan). */
-  private def attrsMaxSegOf(name: String): Option[Int] =
-    """"max_seg"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(readString(fs, attrsMetaPath(name)))
-      .map(_.group(1).toInt)
-
-  /** Next attrs segment number — from the meta hint when present (one
-    * small-file read, NOT a per-refresh scan of the artifact's seg
-    * column, which at corpus scale is a corpus-row-count read per
-    * streamed micro-batch). Callers append the segment, then
-    * [[recordAttrsSeg]]; a crash between the two merely REUSES the
-    * number for the next arrivals — safe, because the healing diff
-    * excludes already-written rows by (id, payload_md5), so a reused
-    * seg only ever mixes rows that are all live.
-    */
-  private def nextAttrsSeg(name: String, genDir: Path): Int =
-    attrsMaxSegOf(name).map(_ + 1).getOrElse(
-      readArtifact(new Path(genDir, "attrs"), AttrsSchema)
-        .agg(coalesce(max("seg"), lit(0)).as("m")).head().getInt(0) + 1)
-
-  private def recordAttrsSeg(name: String, seg: Int): Unit =
-    writeString(fs, attrsMetaPath(name),
-      s"""{"type":"attrs","gen":${attrsGen(name)},"max_seg":$seg}""")
-
-  private def attrsTombstones(name: String): DataFrame =
-    readArtifact(new Path(attrsGenDir(name), "tombstones"), TombstonesSchema)
-
-  private def liveAttrRows(name: String): DataFrame =
-    readArtifact(new Path(attrsGenDir(name), "attrs"), AttrsSchema)
-      .join(broadcast(attrsTombstones(name)), Seq("id", "seg"), "left_anti")
+  // Same lifecycle as the minhash/winsig artifacts ([[SegmentedArtifact]]):
+  // generation pointer in meta.json, segment + tombstone incremental
+  // maintenance diffed on (id, payload_md5) — so UPDATEd payloads re-tag
+  // and DELETEd docs tombstone at delta price — and a stale marker every
+  // mutation sets. The meta also keeps the `max_seg` high-water hint, so a
+  // streamed micro-batch's segment number costs one small-file read, not a
+  // scan of the artifact's seg column. Unlike the screens (which silently
+  // fall back to an in-query recompute, values identical), the attrs
+  // CONSUMER refuses a stale artifact loudly: a silent full-corpus
+  // re-scoring is exactly the cost this sidecar exists to avoid, and at
+  // scale it must never happen by accident (the unindexed-decon refusal
+  // doctrine).
 
   /** The core tagset over one projection — every attribute is the SAME
     * gate-proven column math its standalone query uses (q36's quality
@@ -3123,13 +2512,7 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
         TextAnalysis.stopwordRatioFromToks(col("__toks")).as("__stop"))
     base.select(
       col("id"),
-      // the DIFF key: md5(NULL) is NULL, and a NULL key never equals
-      // itself in the refresh's anti-joins — null-payload rows would
-      // churn (tombstone + re-tag) on every refresh. The sentinel goes
-      // OUTSIDE the md5 so NULL and '' stay DISTINCT states: a ''<->NULL
-      // update must re-tag (their attribute values differ), which a
-      // md5-of-coalesced-text key would silently miss.
-      coalesce(md5(col("payload")), lit("<null>")).as("payload_md5"),
+      attrsKey(col("payload")).as("payload_md5"),
       size(col("__toks")).cast("long").as("n_tokens"),
       // q39's argmax fold over the MATERIALIZED token array (langId
       // itself would re-tokenize per profile — 5× the regex cost)
@@ -3145,11 +2528,15 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       lit(seg).as("seg"))
   }
 
-  private def writeAttrsSegment(name: String, rows: DataFrame, seg: Int,
-      genDir: Path): Unit =
-    attrRows(rows, seg)
-      .write.mode("append").option("compression", Compression)
-      .parquet(new Path(genDir, "attrs").toString)
+  /** The attrs DIFF key: md5(NULL) is NULL, and a NULL key never equals
+    * itself in the refresh's anti-joins — null-payload rows would churn
+    * (tombstone + re-tag) on every refresh. The sentinel goes OUTSIDE the
+    * md5 so NULL and '' stay DISTINCT states: a ''<->NULL update must
+    * re-tag (their attribute values differ), which a md5-of-coalesced-text
+    * key would silently miss.
+    */
+  private def attrsKey(payload: Column): Column =
+    coalesce(md5(payload), lit("<null>"))
 
   /** TAG — build (or rebuild) the attribute sidecar: ONE pass over the
     * collection's payloads computing the core tagset (token count,
@@ -3162,15 +2549,13 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     val cur = read(name)
     require(cur.columns.contains("payload"),
       s"TAG needs a payload column on $name")
-    val dir = attrsDir(name)
-    if (fs.exists(dir)) fs.delete(dir, true)
-    writeAttrsSegment(name, cur, seg = 0, genDir = new Path(dir, "gen_0"))
-    writeString(fs, attrsMetaPath(name),
-      """{"type":"attrs","gen":0,"max_seg":0}""")
+    attrsArt.commit(name, ""","max_seg":0""") {
+      attrsArt.write(attrRows(cur, 0), _, "attrs")
+    }
   }
 
   /** TAG mode=refresh — incremental attribute maintenance
-    * ([[refreshMinhash]]'s discipline): diff collection vs stored rows on
+    * ([[SegmentedArtifact.refresh]]): diff collection vs stored rows on
     * `(id, payload_md5)`, tag ONLY new/changed docs into a fresh segment,
     * tombstone replaced/deleted versions, clear the stale marker. An
     * UPDATEd payload re-tags (its md5 changed); untouched docs never
@@ -3178,88 +2563,36 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     */
   def refreshAttrs(name: String): Unit = {
     requireCollection(name)
-    require(fs.exists(attrsMetaPath(name)),
-      s"no attribute sidecar on $name to refresh — run TAG first")
-    val genDir = attrsGenDir(name)
+    attrsArt.requireExists(name, "refresh")
     val cur = read(name)
     require(cur.columns.contains("payload"),
       s"TAG needs a payload column on $name")
-    val curKeys = cur.select(col("id").cast("long").as("id"),
-      coalesce(md5(col("payload")), lit("<null>")).as("payload_md5"))
-    val stored = liveAttrRows(name)
-    val arrivals = curKeys.join(stored.select("id", "payload_md5"),
-      Seq("id", "payload_md5"), "left_anti").localCheckpoint(true)
-    val departures = stored.join(curKeys, Seq("id", "payload_md5"),
-      "left_anti").select(col("id"), col("seg")).localCheckpoint(true)
-    var wroteSeg = -1
-    if (!arrivals.isEmpty) {
-      val newRows = cur.withColumn("id", col("id").cast("long"))
-        .join(broadcast(arrivals.select("id")), Seq("id"))
-      val nextSeg = nextAttrsSeg(name, genDir)
-      writeAttrsSegment(name, newRows, nextSeg, genDir)
-      recordAttrsSeg(name, nextSeg)
-      wroteSeg = nextSeg
+    val seg = attrsArt.refresh(name,
+        cur.withColumn("id", col("id").cast("long")),
+        attrsKey(col("payload"))) { (rows, s, g) =>
+      attrsArt.write(attrRows(rows, s), g, "attrs")
     }
-    if (!departures.isEmpty) {
-      val newTombs = attrsTombstones(name).union(departures)
-      val tombPath = new Path(genDir, "tombstones")
-      val tmp = new Path(genDir, "tombstones_tmp")
-      newTombs.write.mode("overwrite").option("compression", Compression)
-        .parquet(tmp.toString)
-      if (fs.exists(tombPath)) fs.delete(tombPath, true)
-      if (!fs.rename(tmp, tombPath))
-        throw new IllegalStateException(s"attrs tombstone swap failed for $name")
-    }
-    GraftSqlShims.unpersistCheckpoint(arrivals)
-    GraftSqlShims.unpersistCheckpoint(departures)
-    fs.delete(attrsStaleMarker(name), false)
-    maybeAutoCompactAttrs(name, wroteSeg)
-    ()
+    maybeAutoCompactAttrs(name, seg)
   }
 
-  /** Segment hygiene (the splits auto-compact policy, attrs edition):
-    * every refresh-with-arrivals or ROUTE delta-admission appends a
-    * segment — a streaming twin appends one per micro-batch — so past
-    * `spark.graft.attrs.autoCompactSegments` (default 64, 0 disables)
-    * the maintenance step folds the artifact flat (values unchanged,
-    * pointer-flip commit) before the segment tail and tombstone
-    * anti-join grow unbounded. Checked only when a segment was written.
+  /** Segment hygiene: every refresh-with-arrivals or ROUTE delta
+    * admission appends a segment — a streaming twin appends one per
+    * micro-batch — so past the shared auto-compact policy
+    * ([[SegmentedArtifact.autoCompactDue]]) the maintenance step folds
+    * the artifact flat before the segment tail and tombstone anti-join
+    * grow unbounded. Checked only when a segment was written.
     */
   private def maybeAutoCompactAttrs(name: String, wroteSeg: Int): Unit =
-    if (wroteSeg > 0) {
-      val autoAfter = spark.conf
-        .getOption("spark.graft.attrs.autoCompactSegments")
-        .map(_.toInt).getOrElse(64)
-      if (autoAfter > 0 && wroteSeg > autoAfter) compactAttrs(name)
-    }
+    if (wroteSeg > 0 && attrsArt.autoCompactDue(wroteSeg)) attrsArt.compact(name)
 
   /** TAG mode=compact — fold segments + tombstones to one flat
     * generation without re-scoring any text, committed by the single
-    * meta.json pointer flip (the online compaction discipline). Requires
-    * a LIVE artifact.
+    * meta.json pointer flip ([[SegmentedArtifact.compact]]). Requires a
+    * LIVE artifact.
     */
   def compactAttrs(name: String): Unit = {
     requireCollection(name)
-    require(fs.exists(attrsMetaPath(name)),
-      s"no attribute sidecar on $name to compact — run TAG first")
-    require(!fs.exists(attrsStaleMarker(name)),
-      s"attribute sidecar on $name is stale — TAG mode=refresh first, " +
-        "then compact")
-    val dir = attrsDir(name)
-    val g = attrsGen(name)
-    val nextDir = new Path(dir, s"gen_${g + 1}")
-    if (fs.exists(nextDir)) fs.delete(nextDir, true)
-    liveAttrRows(name).withColumn("seg", lit(0))
-      .write.mode("overwrite").option("compression", Compression)
-      .parquet(new Path(nextDir, "attrs").toString)
-    writeString(fs, attrsMetaPath(name),
-      s"""{"type":"attrs","gen":${g + 1},"max_seg":0}""")
-    Option(fs.listStatus(dir)).getOrElse(Array.empty).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("gen_") && n != s"gen_${g + 1}")
-        fs.delete(st.getPath, true)
-    }
-    ()
+    attrsArt.compact(name)
   }
 
   /** The committed attribute table: (id, n_tokens, lang, quality, n_pii),
@@ -3268,18 +2601,19 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     * CONSUMERS ([[exportCollection]] `attrs=`) refuse staleness loudly.
     *
     * One documented crash window: a [[refreshAttrs]] killed between its
-    * arrivals-segment append and its tombstone swap leaves BOTH versions
-    * of an updated doc visible here until the next refresh completes
-    * (the marker is still set, so filtering consumers refuse
-    * throughout; only this read-while-stale surface and
-    * [[tagSummary]] can see the transient double row — the decon
-    * batch-log window class: documented, not pretended closed).
+    * arrivals-segment append and its tombstone append leaves BOTH
+    * versions of an updated doc visible here until the next refresh
+    * completes (the marker is still set, so filtering consumers refuse
+    * throughout; only this read-while-stale surface and [[tagSummary]]
+    * can see the transient double row — the decon batch-log window
+    * class: documented, not pretended closed).
     */
   def docAttrs(name: String): DataFrame = {
     requireCollection(name)
-    require(fs.exists(attrsMetaPath(name)),
+    require(attrsArt.exists(name),
       s"no attribute sidecar on $name — run TAG first")
-    liveAttrRows(name).select("id", "n_tokens", "lang", "quality", "n_pii")
+    attrsArt.liveRows(attrsArt.at(name), "attrs")
+      .select("id", "n_tokens", "lang", "quality", "n_pii")
   }
 
   /** TAG mode=stats — per-language summary of the committed attributes
@@ -3331,48 +2665,12 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     }.reduce(_ && _)
   }
 
-  /** Mark the attribute sidecar stale (mutations call this): the stored
-    * attributes describe payloads that may have changed. Readers of
-    * [[docAttrs]] still see the committed values; filtering consumers
-    * refuse until a refresh re-tags the delta. No-op when absent.
-    */
-  private def invalidateAttrsIndex(name: String): Unit = {
-    if (fs.exists(attrsMetaPath(name)))
-      writeString(fs, attrsStaleMarker(name), "stale")
-  }
-
   /** Whether the attribute sidecar exists but a mutation marked it
     * stale — the probe the streaming tagger's replay heal uses (a
     * replayed micro-batch whose rows already landed must still clear
     * the staleness its crashed original left behind).
     */
-  private[graft] def attrsStale(name: String): Boolean =
-    fs.exists(attrsMetaPath(name)) && fs.exists(attrsStaleMarker(name))
-
-  private def deleteAttrsIndex(name: String): Unit = {
-    val dir = attrsDir(name)
-    if (fs.exists(dir)) { fs.delete(dir, true); () }
-  }
-
-  /** Mark the stored text index STALE (mutations call this — stale
-    * postings must never serve a query; SEARCHTEXT falls back to the
-    * exact rescan). The artifact itself is KEPT: it is the diff base
-    * [[refreshPostings]] needs to index only the delta. No-op when no
-    * artifact exists.
-    */
-  private def invalidateTextIndex(name: String): Unit = {
-    val dir = textIndexDir(name)
-    if (fs.exists(new Path(dir, "meta.json")))
-      writeString(fs, textIndexStaleMarker(name), "stale")
-  }
-
-  /** Delete the stored text index outright (DROP calls this — the
-    * artifact must not outlive its collection). No-op when absent.
-    */
-  private def deleteTextIndex(name: String): Unit = {
-    val dir = textIndexDir(name)
-    if (fs.exists(dir)) { fs.delete(dir, true); () }
-  }
+  private[graft] def attrsStale(name: String): Boolean = attrsArt.isStale(name)
 
   /** Driver-side twin of [[graft.operators.TextAnalysis.normalizedTokens]]
     * (lowercase, [a-z0-9]+ runs): query terms must pass through the SAME
@@ -3392,12 +2690,6 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
       .digest(term.getBytes("UTF-8"))
     val hex = d.take(2).map("%02x".format(_)).mkString
     Integer.parseInt(hex, 16) % buckets
-  }
-
-  private[graft] def parseTextIndexBuckets(json: String): Int = {
-    val m = """"buckets"\s*:\s*(\d+)""".r.findFirstMatchIn(json)
-    m.map(_.group(1).toInt).getOrElse(throw new IllegalStateException(
-      s"text index meta has no buckets field: $json"))
   }
 
   /** SEARCHHYBRID (extension): reciprocal-rank fusion of SEARCHTEXT and
@@ -3518,40 +2810,25 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
     val unionTerms: Seq[String] = termsByQ.flatMap(_._2).distinct
 
     // ---- sparse branch: one pruned postings pass for the whole batch
-    val tDir = textIndexDir(name)
-    val liveText = fs.exists(new Path(tDir, "meta.json")) &&
-      !fs.exists(textIndexStaleMarker(name))
-    val (hits, doclens) =
-      if (liveText) {
-        val buckets = parseTextIndexBuckets(
-          readString(fs, textIndexMetaPath(name)))
-        val wanted = unionTerms.map(bucketOfTerm(_, buckets)).distinct
-        val postings = readArtifact(
-            new Path(textGenDir(name), "postings"), PostingsSchema)
-          .filter(col("term_bucket").isin(wanted: _*) &&
-            col("term").isin(unionTerms: _*))
-          .join(broadcast(tombstones(name)), Seq("id", "seg"), "left_anti")
-        (postings.select(col("id"), col("term"), col("tf")),
-          liveDoclens(name).select(col("id"), col("dl")))
-      } else {
+    val (hits, doclens) = storedText(name, unionTerms) match {
+      case Some((postings, g)) =>
+        (postings.select(col("id"), col("term"), col("tf")), liveDoclens(g))
+      case None =>
         // a STALE artifact never serves — but silently tokenizing the
         // corpus once per batch call hides the degradation from the
         // caller (the dense branch errors loudly on an unprobeable
         // layout; parity here). No artifact at all = the legitimate
         // index-free path, still one pass for the whole batch.
-        require(!fs.exists(new Path(tDir, "meta.json")),
+        require(!textArt.exists(name),
           s"postings artifact on $name is stale (mutated since the last " +
             "build) — SEARCHHYBRID batch would silently tokenize the " +
             "whole corpus; REINDEX type=postings mode=refresh (or rebuild, " +
             "or DROP the artifact) first")
-        val cur = read(name)
-        require(cur.columns.contains("payload"),
-          s"SEARCHHYBRID needs a payload column on $name " +
-            s"(has: ${cur.columns.mkString(", ")})")
+        val cur = textScan(name, "SEARCHHYBRID")
         (graft.operators.TextAnalysis.invertedIndex(cur, "id", "payload")
             .filter(col("term").isin(unionTerms: _*)),
           graft.operators.TextAnalysis.docLengths(cur, "id", "payload"))
-      }
+    }
     // the batch catalog: (query_id, term, ord) — ord is the term's
     // position in ITS query's list, the fold order that keeps per-query
     // summation identical to the single-query chain
@@ -4367,6 +3644,8 @@ final class GraftDatabase private (val spark: SparkSession, val root: Path) {
 }
 
 object GraftDatabase {
+  import SegmentedArtifact.writeString
+
   private[core] val ReservedPrefix = "graft_"
   // leading underscore: Spark/Hadoop input listing treats it as hidden, so
   // the parquet reader never trips over the sidecars.
@@ -4445,21 +3724,5 @@ object GraftDatabase {
     if (!fs.exists(new Path(root, ConfigFile)))
       throw new IllegalArgumentException(s"not a graft database: $path")
     new GraftDatabase(spark, root)
-  }
-
-  private def writeString(fs: FileSystem, p: Path, s: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(s.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def readString(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try {
-      val bytes = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-      new String(bytes.toByteArray, "UTF-8")
-    } finally in.close()
   }
 }

@@ -7,10 +7,11 @@ import org.apache.spark.sql.types.{DataType, StructType}
 /** Restartable stage-boundary persistence for multi-stage pipelines
   * (r13 verdict item 2): each stage's output frame is written to
   * `<root>/<stage>/gen_<g>/data` and COMMITTED by the single
-  * `meta.json` overwrite — the artifact generation-pointer discipline
-  * (compactPostings precedent), so a crash at ANY point leaves either
-  * "stage absent" (no meta — recompute) or "stage complete" (meta —
-  * read back), never a half-written table a resume would trust.
+  * `meta.json` overwrite — the [[SegmentedArtifact]] generation-pointer
+  * discipline, on its commit and sweep primitives — so a crash at ANY
+  * point leaves either "stage absent" (no meta — recompute) or "stage
+  * complete" (meta — read back), never a half-written table a resume
+  * would trust.
   *
   * A resumed run calls [[stage]] with the same root: committed stages
   * read back from their pinned generation (schema from the committed
@@ -26,6 +27,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * stage grain instead of re-reading the corpus.
   */
 final class StageStore(spark: SparkSession, rootDir: String) {
+  import SegmentedArtifact.{genOf, nextGen, readString, sweep, writeString}
+
   private val root = new Path(rootDir)
   private val fs: FileSystem =
     root.getFileSystem(spark.sessionState.newHadoopConf())
@@ -65,12 +68,10 @@ final class StageStore(spark: SparkSession, rootDir: String) {
     val dir = new Path(root, name)
     val meta = metaPath(name)
     if (fs.exists(meta)) {
-      val g = """"gen"\s*:\s*(\d+)""".r
-        .findFirstMatchIn(readString(meta)).map(_.group(1).toInt)
-        .getOrElse(throw new IllegalStateException(
-          s"stage $name meta has no gen field"))
-      val schema = DataType.fromJson(
-        readString(new Path(dir, s"gen_$g/schema.json"))).asInstanceOf[StructType]
+      val g = genOf(readString(fs, meta)).getOrElse(
+        throw new IllegalStateException(s"stage $name meta has no gen field"))
+      val schema = DataType.fromJson(readString(fs,
+        new Path(dir, s"gen_$g/schema.json"))).asInstanceOf[StructType]
       // explicit schema: a zero-row stage reads back as the empty frame;
       // driver-side listing — partitioned stages are tens of dirs and
       // the distributed listing job is pure overhead there (ScaleKnobs)
@@ -78,7 +79,7 @@ final class StageStore(spark: SparkSession, rootDir: String) {
         spark.read.schema(schema)
           .parquet(new Path(dir, s"gen_$g/data").toString))
     } else {
-      val g = nextGen(dir)
+      val g = nextGen(fs, dir)
       val genDir = new Path(dir, s"gen_$g")
       val out = compute
       computed += name
@@ -94,11 +95,11 @@ final class StageStore(spark: SparkSession, rootDir: String) {
       val w = out.write.mode("overwrite")
       (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
         .parquet(new Path(genDir, "data").toString)
-      writeString(new Path(genDir, "schema.json"), out.schema.json)
+      writeString(fs, new Path(genDir, "schema.json"), out.schema.json)
       if (failBeforeCommit.contains(name))
         throw new IllegalStateException(s"injected crash before commit: $name")
-      writeString(meta, s"""{"stage":"$name","gen":$g}""")
-      sweepOrphans(dir, g)
+      writeString(fs, meta, s"""{"stage":"$name","gen":$g}""")
+      sweep(fs, dir, keep = g)
       if (failAfterCommit.contains(name))
         throw new IllegalStateException(s"injected crash after commit: $name")
       stage(name)(sys.error("unreachable — just committed"))
@@ -108,32 +109,5 @@ final class StageStore(spark: SparkSession, rootDir: String) {
   /** Committed generation of `stage`, if any (spec introspection). */
   private[graft] def committedGen(stage: String): Option[Int] =
     if (!fs.exists(metaPath(stage))) None
-    else """"gen"\s*:\s*(\d+)""".r
-      .findFirstMatchIn(readString(metaPath(stage))).map(_.group(1).toInt)
-
-  private def nextGen(dir: Path): Int = {
-    val existing =
-      if (!fs.exists(dir)) Seq.empty
-      else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("gen_")).map(_.drop(4).toInt)
-    if (existing.isEmpty) 0 else existing.max + 1
-  }
-
-  private def sweepOrphans(dir: Path, keep: Int): Unit = {
-    fs.listStatus(dir).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("gen_") && n != s"gen_$keep")
-        fs.delete(st.getPath, true)
-    }
-  }
-
-  private def writeString(p: Path, s: String): Unit = {
-    val o = fs.create(p, true)
-    try o.write(s.getBytes("UTF-8")) finally o.close()
-  }
-
-  private def readString(p: Path): String = {
-    val i = fs.open(p)
-    try scala.io.Source.fromInputStream(i, "UTF-8").mkString finally i.close()
-  }
+    else genOf(readString(fs, metaPath(stage)))
 }

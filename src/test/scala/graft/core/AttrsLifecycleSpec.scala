@@ -163,7 +163,7 @@ class AttrsLifecycleSpec extends AnyFunSuite {
   test("refresh auto-compacts past the segment threshold, values unchanged") {
     val d = db(Seq(docEn))
     d.reindexAttrs("docs")
-    spark.conf.set("spark.graft.attrs.autoCompactSegments", "2")
+    spark.conf.set("spark.graft.artifacts.autoCompactSegments", "2")
     try {
       // three refreshes with arrivals → segments 1, 2, then 3 trips the
       // conf-lowered threshold and folds the artifact flat
@@ -183,7 +183,7 @@ class AttrsLifecycleSpec extends AnyFunSuite {
       d.bulkInsert("docs", Seq((24L, "der hund ist")).toDF("id", "payload"))
       d.refreshAttrs("docs")
       assert(attrsMap(d).keySet == Set(1L, 21L, 22L, 23L, 24L))
-    } finally spark.conf.unset("spark.graft.attrs.autoCompactSegments")
+    } finally spark.conf.unset("spark.graft.artifacts.autoCompactSegments")
   }
 
   test("tagSummary: per-language doc/token/clean counts") {

@@ -328,7 +328,7 @@ class SplitLifecycleSpec extends AnyFunSuite {
       Seq((100L, "zork quux fnord blarg wibble wobble flib glorp snark quib"))
         .toDF("id", "payload")).collect()
     assert(segs() == 1L)
-    spark.conf.set("spark.graft.splits.autoCompactSegments", "2")
+    spark.conf.set("spark.graft.artifacts.autoCompactSegments", "2")
     try {
       d.routeArrivals("docs",
         Seq((101L, "aa bb cc dd ee ff gg hh ii jj")).toDF("id", "payload"))
@@ -348,7 +348,7 @@ class SplitLifecycleSpec extends AnyFunSuite {
         "auto-compaction must be content-preserving")
       assert(after.exists(_._1 == 102L),
         "the compacted generation must carry the triggering batch")
-    } finally spark.conf.unset("spark.graft.splits.autoCompactSegments")
+    } finally spark.conf.unset("spark.graft.artifacts.autoCompactSegments")
   }
 
   test("an id inserted outside ROUTE after SPLIT refuses admission (duplicate-id guard)") {
